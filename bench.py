@@ -115,7 +115,7 @@ HEADLINE = [
 
 def release_pins(spark) -> None:
     """Blocking-unpersist every leftover persistent RDD (eager
-    localCheckpoint pins from ops.pin / materialize modes).  The
+    localCheckpoint pins from ops.pin).  The
     ContextCleaner releases these asynchronously AFTER the owning
     plan is garbage — too late for back-to-back bench cells, where a
     prior query's pinned corpus table sits in the unified memory
@@ -150,15 +150,17 @@ def main() -> None:
     # cluster session sees. Warming at the same SF matters: AQE picks
     # different physical strategies (broadcast vs SMJ) at different
     # data sizes, so smaller-SF warm-up would compile the wrong plans.
+    # A cell that raises stops the bench here, named, instead of
+    # failing later inside its timed loop.
     for name in HEADLINE:
         try:
             QUERIES[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:
-            pass
+        except Exception as exc:
+            raise RuntimeError(f"bench warm-up failed on {name}") from exc
     spark.catalog.clearCache()  # drop warm-up persists; keep JIT/codegen
-    release_pins(spark)  # drop warm-up localCheckpoint pins too
+    release_pins(spark)  # drop warm-up pins too
     # settle before the timed pass so warm-up garbage isn't collected
     # in the middle of the first timed query
     spark._jvm.System.gc()

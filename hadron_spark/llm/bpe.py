@@ -31,7 +31,7 @@ Spark:
   driver-coordinated rounds from `num_merges` to roughly
   `num_merges / merge_batch` — the difference between a 32k-vocab
   train being 32k Spark jobs and being ~2k.
-- the vocab frame is re-pinned each round (localCheckpoint) so the
+- the vocab frame is re-pinned each round (ops.pin) so the
   lineage stays one round deep instead of accreting R nested folds.
 
 Applying the trained merges to a corpus goes through the word→tokens

@@ -1016,7 +1016,6 @@ def repeated_spans(
     text_col: str = "text",
     window: int = 8,
     min_count: int = 2,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Corpus-level EXACT-SUBSTRING duplication report (the
     ExactSubstr pass of Lee et al. 2022, arXiv:2107.06499, token
@@ -1031,62 +1030,17 @@ def repeated_spans(
     n_positions = repeated window positions merged into the island.
 
     Scale shape: a tokenize+explode pass emitting (doc, pos,
-    fingerprint); a fingerprint-keyed partial-agg count (the
-    wordcount exchange); repeated-fingerprint survivors are then
-    semi-joined back to positions on the same key; island merging is
-    a per-document windowed scan (partitioned by doc, never
+    fingerprint); ONE WindowExec — `count(*) over (partition by fp)`
+    then filter — keeps the positions whose fingerprint repeats, so
+    the position table is evaluated once, shuffled once (hash by
+    fp), and never pinned (it is ~one row per corpus token, a
+    corpus-sized copy at 100 TB); a celebrity fingerprint spills
+    through WindowExec's external row buffer. Island merging is a
+    per-document windowed scan (partitioned by doc, never
     single-partition). Everything is exact integers + md5, so the
-    whole report hash-matches a DuckDB replay — unusual for a dedup
-    operator and the reason this one carries a full SQL oracle
-    (q208).
-
-    `materialize` decides how the position table feeds its two
-    consumers (the count pass and the survivor probe) — the
-    VERDICT-r3 caveat: the exploded table is ~one row per corpus
-    token (id+pos+16-byte fp ≈ 30 B), i.e. pinning it materializes
-    a corpus-sized copy on executor storage at 100 TB, and
-    localCheckpoint truncates lineage (not executor-loss-resilient):
-    - "recompute" (DEFAULT — the 100 TB mode): zero storage; the
-      explode is evaluated twice (once under the count, once under
-      the probe).  Tokenize+hash is cheap narrow CPU against a
-      columnar scan; two scans beat storing the corpus.
-    - "bloom": recompute, plus the probe side is pre-filtered
-      through a broadcast Bloom bitmap of the hot fingerprints
-      (`joins.bloom_prefilter_join`) so non-repeated positions —
-      the vast majority in a mostly-clean corpus — die at the scan
-      instead of riding the semi-join shuffle.  Exact same output
-      (false positives only waste a probe row).
-    - "local_checkpoint" / "checkpoint": pin the position table
-      (ops.pin) — one scan total; right when the corpus fits
-      executor storage comfortably (bench scale) or the scan is
-      expensive (remote object store), wrong at 100 TB.
-    - "window" (optimization r07): collapse the count pass and the
-      survivor probe into ONE WindowExec — `count(*) over
-      (partition by fp)` then filter — so the position table is
-      evaluated once, shuffled once (hash by fp), and nothing is
-      pinned.  Strictly fewer passes than every other mode at every
-      scale (recompute: 2 evaluations + agg shuffle + probe
-      shuffle; pin: storage write of a corpus-sized table at
-      100 TB), and a celebrity fingerprint spills through
-      WindowExec's external row buffer exactly like it would
-      through the sort-merge semi-join.  Measured at sf0.1
-      (min-of-3, same session): window 1.38-1.60 s vs pin
-      1.48-1.71 s vs recompute 2.38 s vs bloom 4.25 s.
-    - "auto" (the default): resolves to "window" — it dominates
-      the pin/recompute split the r07 auto mode originally chose
-      between, at both bench scale and the 100 TB shape.  Every
-      mode computes the identical output; the knob only picks the
-      physical plan."""
+    whole report hash-matches a DuckDB replay — the reason this
+    operator carries a full SQL oracle (q208)."""
     from pyspark.sql import Window as _W
-
-    _MODES = (
-        "auto", "recompute", "bloom", "window",
-        "local_checkpoint", "checkpoint",
-    )
-    if materialize not in _MODES:
-        raise ValueError(f"materialize must be one of {_MODES}: {materialize!r}")
-    if materialize == "auto":
-        materialize = "window"
 
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
     # (pos, fingerprint-of-window-at-pos) pairs built inside the row
@@ -1102,49 +1056,18 @@ def repeated_spans(
         .select(id_col, F.explode(grams).alias("g"))
         .select(id_col, F.col("g.pos").alias("pos"), F.col("g.fp").alias("fp"))
     )
-    if materialize in ("local_checkpoint", "checkpoint"):
-        from hadron_spark.operators.ops import pin
-
-        pos = pin(pos, materialize)
-    if materialize == "window":
-        # single-consumer plan: ONE evaluation of the position table,
-        # ONE shuffle (hash by fp) + per-partition sort feeding a
-        # whole-group count — the count pass and the survivor probe
-        # collapse into the same WindowExec. Identical survivors: a
-        # row passes iff its fp's corpus-wide count >= min_count.
-        wfp = _W.partitionBy("fp")
-        rep = (
-            pos.withColumn("_nfp", F.count(F.lit(1)).over(wfp))
-            .filter(F.col("_nfp") >= min_count)
-            .drop("_nfp")
-        )
-        return _merge_islands(rep, id_col, window)
-    hot = (
-        pos.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
+    # a row survives iff its fp's corpus-wide count >= min_count
+    rep = (
+        pos.withColumn("_nfp", F.count(F.lit(1)).over(_W.partitionBy("fp")))
+        .filter(F.col("_nfp") >= min_count)
+        .drop("_nfp")
     )
-    if materialize == "bloom":
-        from hadron_spark.operators.joins import bloom_prefilter_join
-
-        # dim key aliased: hot derives FROM pos, so a same-named key
-        # in the final fact⋈dim condition would be self-ambiguous
-        rep = bloom_prefilter_join(
-            pos,
-            hot.select(F.col("fp").alias("fp_hot")),
-            "fp",
-            "fp_hot",
-            how="left_semi",
-        )
-    else:
-        rep = pos.join(hot.select("fp"), "fp", "left_semi")
     return _merge_islands(rep, id_col, window)
 
 
 def _merge_islands(rep: DataFrame, id_col: str, window: int) -> DataFrame:
     """Gaps-and-islands per document: a position starts a new island
-    when it begins after the previous covered extent ends. Shared
-    tail of every repeated_spans materialize mode."""
+    when it begins after the previous covered extent ends."""
     from pyspark.sql import Window as _W
 
     w = _W.partitionBy(id_col).orderBy("pos")
@@ -1179,17 +1102,14 @@ def exact_substring_dedup(
     window: int = 8,
     min_count: int = 2,
     out_col: str = "clean_text",
-    materialize: str = "auto",
 ) -> DataFrame:
     """Remove every repeated island's tokens from each document
     (keeping the FIRST window of each island is a policy variant;
     this removes the whole island — the conservative Lee et al.
     cut), re-joining survivors with single spaces. Documents with no
     repeated span pass through with whitespace normalized the same
-    way so the output column is uniformly single-spaced.
-    `materialize` routes through to `repeated_spans` (see its
-    storage-vs-scan tradeoff)."""
-    spans = repeated_spans(df, id_col, text_col, window, min_count, materialize)
+    way so the output column is uniformly single-spaced."""
+    spans = repeated_spans(df, id_col, text_col, window, min_count)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )

@@ -24,12 +24,10 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hadron_spark.operators.ops import pin, range_cumsum
+from hadron_spark.operators.ops import _range_cumsum, pin, range_cumsum
 
 
-def _score_spine(
-    df: DataFrame, score_col: str, label_col: str, materialize: str
-) -> DataFrame:
+def _score_spine(df: DataFrame, score_col: str, label_col: str) -> DataFrame:
     """(score, n_pos, n_tot, cum_pos, cum_tot) — cums EXCLUSIVE,
     ascending score order. Label must be 0/1-valued."""
     spine = (
@@ -43,14 +41,13 @@ def _score_spine(
             F.count(F.lit(1)).alias("n_tot"),
         )
     )
-    spine = pin(spine, materialize)
-    spine = range_cumsum(
+    spine = pin(spine)
+    spine = _range_cumsum(
         spine,
         key=F.col("score"),
         val=F.col("n_pos"),
         order=[F.col("score").asc()],
         out_col="cum_pos",
-        materialize="none",
     )
     # the second pass pins its input (the first pass's output feeds
     # the min/max, per-band, and windowed branches); the first runs
@@ -61,7 +58,6 @@ def _score_spine(
         val=F.col("n_tot"),
         order=[F.col("score").asc()],
         out_col="cum_tot",
-        materialize="local_checkpoint",
     )
 
 
@@ -69,7 +65,6 @@ def pr_curve(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Exact precision/recall/F1 at EVERY observed decision threshold
     (predict positive when score >= t, one row per distinct score) —
@@ -81,7 +76,7 @@ def pr_curve(
     divisions of those exact longs (F1 = 2tp/(pred+P) — already a
     ratio of ints, no P,R intermediates). Returns (threshold, tp,
     fp, fn, precision, recall, f1) ordered-agnostic."""
-    spine = _score_spine(df, score_col, label_col, materialize)
+    spine = _score_spine(df, score_col, label_col)
     tot = spine.agg(
         F.sum("n_pos").alias("_P"), F.sum("n_tot").alias("_N")
     )
@@ -105,7 +100,6 @@ def auc(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Exact ROC AUC via the Mann-Whitney U statistic with textbook
     tie handling (average ranks), one row:
@@ -118,7 +112,7 @@ def auc(
     come from the spine's exclusive prefix (avg doubled rank of a
     group = 2·cum_tot + n_tot + 1), weighted by the group's
     positive count — one spine pass after the corpus aggregate."""
-    spine = _score_spine(df, score_col, label_col, materialize)
+    spine = _score_spine(df, score_col, label_col)
     r2 = (
         spine.select(
             (
@@ -381,7 +375,6 @@ def bradley_terry(
     iters: int = 20,
     weight_col: str | None = None,
     eps: float = 1e-12,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Bradley-Terry strength fitting over pairwise outcomes — the
     model behind preference-data leaderboards (RLHF reward QC,
@@ -431,25 +424,21 @@ def bradley_terry(
         outcomes.select(a.alias("_a"), b.alias("_b"), "_n")
         .groupBy("_a", "_b")
         .agg(F.sum("_n").alias("_nab")),
-        materialize,
     )
     wins = pin(
         outcomes.select(F.col("_w").alias("item"), "_n")
         .groupBy("item")
         .agg(F.sum("_n").alias("wins")),
-        materialize,
     )
     losses = pin(
         outcomes.select(F.col("_l").alias("item"), "_n")
         .groupBy("item")
         .agg(F.sum("_n").alias("losses")),
-        materialize,
     )
     items = pin(
         und.select(F.col("_a").alias("item"))
         .union(und.select(F.col("_b").alias("item")))
         .distinct(),
-        materialize,
     )
     dirs = pin(
         und.select(
@@ -459,7 +448,6 @@ def bradley_terry(
                 F.col("_b").alias("item"), F.col("_a").alias("_other"), "_nab"
             )
         ),
-        materialize,
     )
     strengths = items.withColumn("p", F.lit(1.0))
     for _ in range(iters):
@@ -503,7 +491,7 @@ def bradley_terry(
         # one pin per round: `raw` feeds the totals AND both join
         # sides of the next round; the normalized frame is a narrow
         # projection off it (re-running that per branch is free)
-        raw = pin(raw, materialize)
+        raw = pin(raw)
         tot = raw.agg(
             F.count(F.lit(1)).alias("_c"),
             F.aggregate(
@@ -856,7 +844,6 @@ def confusion_at_threshold(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Full confusion-matrix row at EVERY observed threshold
     (predict positive when score >= t) with the derived quality
@@ -876,7 +863,7 @@ def confusion_at_threshold(
     one-class slices yield NULL rates (ANSI division discipline —
     never ±inf).  Returns (threshold, tp, fp, fn, tn, tpr, fpr,
     specificity, j, mcc)."""
-    spine = _score_spine(df, score_col, label_col, materialize)
+    spine = _score_spine(df, score_col, label_col)
     tot = spine.agg(F.sum("n_pos").alias("_P"), F.sum("n_tot").alias("_N"))
     s = spine.crossJoin(F.broadcast(tot))
     tp = F.col("_P") - F.col("cum_pos")
@@ -918,7 +905,6 @@ def youden_threshold(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """The Youden-optimal operating point: the threshold maximizing
     J = tpr − fpr, decided ENTIRELY in exact integers — the
@@ -927,7 +913,7 @@ def youden_threshold(
     i.e. the most-recall operating point among equals, via
     struct-ordered max) — so the selection is hash-exact, not a
     float argmax.  One row: (threshold, tp, fp, fn, tn, j)."""
-    spine = _score_spine(df, score_col, label_col, materialize)
+    spine = _score_spine(df, score_col, label_col)
     tot = spine.agg(F.sum("n_pos").alias("_P"), F.sum("n_tot").alias("_N"))
     s = spine.crossJoin(F.broadcast(tot))
     tp = F.col("_P") - F.col("cum_pos")

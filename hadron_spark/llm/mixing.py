@@ -226,7 +226,6 @@ def select_token_budget(
     id_col: str = "doc_id",
     cum_col: str = "cum_tokens",
     buckets: int | None = None,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Greedy selection of the highest-`score_col` documents whose
     cumulative `token_col` stays within an exact token budget — the
@@ -257,7 +256,6 @@ def select_token_budget(
         out_col=cum_col,
         inclusive=True,
         buckets=buckets,
-        materialize=materialize,
     )
     return sel.filter(F.col(cum_col) <= F.lit(int(budget)))
 
@@ -267,7 +265,6 @@ def systematic_pps_sample(
     n: int,
     weight_col: str,
     id_col: str = "doc_id",
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Systematic probability-proportional-to-size sampling (Madow
     1949 — the classic fixed-size weighted design): draw EXACTLY n
@@ -310,7 +307,6 @@ def systematic_pps_sample(
         order=[F.col("_h"), F.col(id_col)],
         out_col="_c",
         inclusive=False,
-        materialize=materialize,
     )
     w_long = F.col(weight_col).cast("long")
     total = pre.agg(F.max(F.col("_c") + w_long).alias("w")).first()["w"]

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hadron_spark.functions.vectors import cosine_similarity
+from hadron_spark.operators.ops import pin
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -511,8 +512,6 @@ def kmeans(
         )
         new_c = {r["cluster"]: [float(x) for x in r["c"]] for r in means}
         centroids = [new_c.get(i, centroids[i]) for i in range(k)]
-    from hadron_spark.operators.ops import pin
-
     # pin the returned assignment: every consumer (semantic_dedup's
     # guard + self-join, IVF's probe join) references it from 2-4
     # plan branches, and without the pin each branch re-embeds the
@@ -1108,7 +1107,7 @@ def ivf_append(
         F.col(vec_col).alias("cvec"),
         F.element_at(F.array_sort(dists), 1)["cell"].alias("cell"),
     )
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(assigned)
     assigned.write.mode("append").partitionBy("cell").parquet(
         f"{index_dir}/cells.parquet"
     )

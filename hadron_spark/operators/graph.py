@@ -14,7 +14,7 @@ Scale notes:
 - State per round is the edge list only (no adjacency collection —
   high-degree nodes never materialize a neighbor array; mins come
   from a groupBy, so partial aggregation bounds every reducer).
-- `localCheckpoint` each round truncates lineage: without it the
+- `ops.pin` each round truncates lineage: without it the
   plan doubles per iteration and the driver OOMs on plan size long
   before data is a problem.
 - Convergence is detected with a cheap invariant (edge count + sum of
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from hadron_spark.operators.ops import pin
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -82,11 +84,11 @@ def connected_components(
     rows for isolated nodes (no incident edges).
     """
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    e = e.localCheckpoint(eager=True)
+    e = pin(e)
     prev = None
     for _ in range(max_iter):
         e = _canon(_small_star(_large_star(e)))
-        e = e.localCheckpoint(eager=True)
+        e = pin(e)
         stat = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("src") + F.col("dst")).alias("s"),
@@ -131,7 +133,7 @@ def pagerank(
       list; no adjacency lists are ever collected, so high-degree
       nodes cost only their edge rows.
     - edges and out-degrees are persisted once and reused every round;
-      ranks are localCheckpoint'ed per round to truncate lineage
+      ranks are pinned per round to truncate lineage
       (otherwise the plan doubles per iteration and the driver dies
       on plan size long before data volume matters).
     - Iterative algorithms are inherently outside the reference's
@@ -171,7 +173,7 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
             ).alias("rank"),
         )
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = pin(ranks)
     return ranks
 
 
@@ -201,17 +203,19 @@ def tree_depth(
     walked distance accumulates, so a height-h forest converges in
     ⌈log₂ h⌉ self-joins instead of h frontier expansions — at 100 TB
     that's ~5 key-partitioned shuffles for a billion-node hierarchy,
-    each localCheckpoint'ed to truncate lineage (same discipline as
+    each pinned to truncate lineage (same discipline as
     connected_components above). Roots self-loop with distance 0, so
     Σd is monotone and stalls exactly at convergence."""
-    st = df.select(
-        F.col(node).alias("node"),
-        F.coalesce(F.col(parent), F.col(node)).alias("anc"),
-        F.when(F.col(parent).isNull(), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("d"),
-    ).localCheckpoint(eager=True)
+    st = pin(
+        df.select(
+            F.col(node).alias("node"),
+            F.coalesce(F.col(parent), F.col(node)).alias("anc"),
+            F.when(F.col(parent).isNull(), F.lit(0))
+            .otherwise(F.lit(1))
+            .cast("long")
+            .alias("d"),
+        )
+    )
     prev = None
     for _ in range(max_iter):
         hop = st.select(
@@ -219,14 +223,12 @@ def tree_depth(
             F.col("anc").alias("anc2"),
             F.col("d").alias("d2"),
         )
-        st = (
-            st.join(hop, "anc")
-            .select(
+        st = pin(
+            st.join(hop, "anc").select(
                 "node",
                 F.col("anc2").alias("anc"),
                 (F.col("d") + F.col("d2")).alias("d"),
             )
-            .localCheckpoint(eager=True)
         )
         cur = st.agg(F.sum("d")).first()[0]
         if cur == prev:
@@ -250,7 +252,7 @@ def hits(
 
     Scale shape mirrors pagerank: each half-round is one join on the
     edge list + one re-aggregation (two shuffles), the edge list is
-    persisted once, scores are localCheckpoint'ed per round so the
+    persisted once, scores are pinned per round so the
     plan stays one round deep, and the L2 norm is a broadcast 1-row
     aggregate — no adjacency list ever materializes, so hub nodes
     cost only their edge rows. Returns (node, hub, auth)."""
@@ -304,7 +306,7 @@ def hits(
             scores.drop("hub").join(hub, "node", "left").fillna({"hub": 0.0}),
             "hub",
         )
-        scores = scores.localCheckpoint(eager=True)
+        scores = pin(scores)
     return scores.select("node", "hub", "auth")
 
 
@@ -325,7 +327,7 @@ def label_propagation(
     Scale shape: per round one join edge⋈labels + one count per
     (node, label) + one deterministic arg-max window partitioned by
     node — shuffles keyed on node ids, no adjacency collection;
-    labels localCheckpoint'ed per round. Returns (node, label)."""
+    labels pinned per round. Returns (node, label)."""
     from pyspark import StorageLevel
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -352,12 +354,10 @@ def label_propagation(
             .filter(F.col("_rk") == 1)
             .select("node", "label")
         )
-        labels = (
-            nodes.join(winner, "node", "left")
-            .select(
+        labels = pin(
+            nodes.join(winner, "node", "left").select(
                 "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
             )
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -429,7 +429,7 @@ def _triangle_frame(e: DataFrame) -> DataFrame:
     # discipline, ops.pin).  Pinned two columns only — the r07 shape
     # also pinned both (deg, id) struct keys; the intersection needs
     # none of them (orientation already encodes the order).
-    oriented = oriented.localCheckpoint(eager=True)
+    oriented = pin(oriented)
     adj = oriented.groupBy(F.col("u").alias("n")).agg(
         F.collect_list("v").alias("nbrs")
     )
@@ -543,7 +543,7 @@ def coreness(
     parallel).  Each round: one edge join on the label table, one
     per-node descending rank window, one max(least(rank, c)) agg —
     all shuffles keyed on node ids, no adjacency collection; labels
-    localCheckpoint per round (lineage discipline).  Convergence is
+    pinned per round (lineage discipline).  Convergence is
     the exact fixpoint of Σc (monotone non-increasing under H).
 
     Deterministic: H is a pure multiset function — no tie-breaks at
@@ -552,10 +552,10 @@ def coreness(
     from pyspark.sql import Window
 
     e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
-    und = _sym(e).localCheckpoint(eager=True)
-    labels = und.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    und = pin(_sym(e))
+    labels = pin(
+        und.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("c"))
+    )
     prev = None
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("nbr"))
     for _ in range(max_iter):
@@ -567,7 +567,7 @@ def coreness(
             .groupBy("node")
             .agg(F.max(F.least(F.col("_rk"), F.col("c"))).alias("c"))
         )
-        labels = hidx.localCheckpoint(eager=True)
+        labels = pin(hidx)
         cur = labels.agg(F.sum("c").alias("s")).first()["s"]
         if cur == prev:
             break
@@ -655,7 +655,7 @@ def common_neighbors(
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1: {min_common}")
     und = _sym(_canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))))
-    und = und.localCheckpoint(eager=True)
+    und = pin(und)
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )

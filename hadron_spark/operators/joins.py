@@ -31,6 +31,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadron_spark.operators.ops import pin
+
 REQUIRED = "required"  # JRequired (Join.hs:48)
 OPTIONAL = "optional"  # JOptional (Join.hs:49)
 
@@ -269,17 +271,16 @@ def bloom_prefilter_join(
             )
         ).alias("_pos")
     )
-    bitmap = (
+    # pinned: the bitmap feeds TWO broadcast probes, and without the
+    # pin the dim-distinct + explode + OR-merge would run once per
+    # probe (it is ≤ m_bits/64 rows — the pin is ~free)
+    bitmap = pin(
         bits.select(
             F.expr("_pos div 64").alias("_word"),
             F.expr("shiftleft(1L, CAST(_pos % 64 AS INT))").alias("_m1"),
         )
         .groupBy("_word")
         .agg(F.bit_or("_m1").alias("_mask"))
-        # materialize once: the bitmap feeds TWO broadcast probes, and
-        # without this the dim-distinct + explode + OR-merge would run
-        # once per probe (it is ≤ m_bits/64 rows — checkpoint is ~free)
-        .localCheckpoint(eager=True)
     )
     probed = fact
     for salt in (0, 1):

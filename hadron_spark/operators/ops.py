@@ -3,8 +3,9 @@
 The reference has no SQL layer — users compose map/shuffle/reduce by
 hand (SURVEY §2.3-2.7). This module declares the equivalent relational
 surface as thin, Catalyst-friendly DataFrame combinators so every
-capability is a named, testable operator. Nothing here materializes;
-everything stays in the lazy plan for whole-stage codegen.
+capability is a named, testable operator. Nothing here materializes
+except `pin` (and the operators that call it); everything else stays in
+the lazy plan for whole-stage codegen.
 
 Scale notes are attached per-op: which ones shuffle, which broadcast,
 which are narrow.
@@ -574,69 +575,42 @@ def partition_stats(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _materialize_once(df: DataFrame, mode: str) -> DataFrame:
-    """Pin a frame that feeds MULTIPLE plan branches so its upstream
-    (often a full fact scan + shuffle) runs exactly once.
-
-    Catalyst's ReuseExchange/AQE stage reuse only collapses branches
-    whose canonicalized subtrees are bit-identical; the fan-out frames
-    here feed branches with *different* projections (a 1-row min/max
-    agg, a per-band count, the full windowed pass), so reuse is not
-    guaranteed — and measured plans for q154 showed the upstream
-    evaluated once per branch. At 100 TB "evaluate the aggregate
-    3×" means three full fact scans; an eager localCheckpoint caps
-    it at one, truncates the lineage (the downstream plan starts at
-    a compact materialized RDD), and makes every branch read the
-    SAME bytes — determinism by construction rather than by the
-    re-evaluation-stability argument. Storage is MEMORY_AND_DISK on
-    the executors; Spark's ContextCleaner unpersists the blocks when
-    the result frame is dropped.
-
-    Modes:
-      "local_checkpoint" — executor-local blocks. Fastest; NOT
-          resilient to executor loss (a lost block kills the job
-          stage — lineage was truncated). The right default for the
-          single-app lifetime these frames have on local mode and
-          for short cluster jobs.
-      "checkpoint" — RELIABLE checkpoint to the configured
-          `sparkContext.setCheckpointDir` (HDFS/object store):
-          survives executor loss, costs a distributed-FS write +
-          read. Use for 100 TB cluster runs where recomputing the
-          upstream on a lost executor is unaffordable or the job
-          must tolerate node churn.
-      "none" — no pin (caller guarantees single consumption)."""
-    if mode == "local_checkpoint":
-        return df.localCheckpoint(eager=True)
-    if mode == "checkpoint":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            raise ValueError(
-                "materialize='checkpoint' needs a reliable checkpoint "
-                "dir: call spark.sparkContext.setCheckpointDir(...) "
-                "with an HDFS/object-store path first"
-            )
-        return df.checkpoint(eager=True)
-    if mode == "none":
-        return df
-    raise ValueError(
-        f"materialize must be local_checkpoint|checkpoint|none, got {mode!r}"
-    )
-
-
-def pin(df: DataFrame, materialize: str = "local_checkpoint") -> DataFrame:
-    """Public fan-out pin: evaluate `df` exactly once (eager
-    localCheckpoint) before it feeds multiple plan branches.
+def pin(df: DataFrame) -> DataFrame:
+    """Evaluate `df` exactly once (eager checkpoint) before it feeds
+    multiple plan branches, so its upstream (often a full fact scan +
+    shuffle) runs once — or before the next round of an iterative
+    loop, so the plan stays one round deep. This is the ONLY place in
+    hadron_spark that materializes a frame.
 
     Use whenever a derived frame (an aggregate, a distinct, a
     windowed filter) is consumed by 2+ downstream branches of the
-    same query: Catalyst does NOT guarantee subtree reuse across
-    differently-projected branches (measured — see
-    _materialize_once), so without the pin each branch re-runs the
-    derivation, i.e. re-scans the fact table at 100 TB. The pinned
-    frame trades one executor-storage write for N-1 repeated
-    upstream evaluations. Do NOT pin frames used once, frames that
-    are themselves cheap scans, or streaming frames."""
-    return _materialize_once(df, materialize)
+    same query. Catalyst's ReuseExchange/AQE stage reuse only
+    collapses branches whose canonicalized subtrees are bit-identical;
+    fan-out frames feed branches with *different* projections (a 1-row
+    min/max agg, a per-band count, the full windowed pass), so reuse
+    is not guaranteed — measured plans for q154 showed the upstream
+    evaluated once per branch, i.e. one fact scan per branch at
+    100 TB. The pin caps it at one, truncates the lineage (the
+    downstream plan starts at a compact materialized RDD), and makes
+    every branch read the SAME bytes — determinism by construction.
+    Do NOT pin frames used once, frames that are themselves cheap
+    scans, or streaming frames (a foreachBatch micro-batch is a batch
+    frame: pinning it detaches it from the stream plan).
+
+    Reliability follows the deployment, not the call site:
+      - no checkpoint dir set (the default): `localCheckpoint` —
+        MEMORY_AND_DISK blocks on the executors, the fastest storage;
+        NOT resilient to executor loss (lineage is truncated, so a
+        lost block fails the stage). Spark's ContextCleaner
+        unpersists the blocks when the result frame is dropped.
+      - `spark.sparkContext.setCheckpointDir(path)` called: a
+        reliable `checkpoint` to that HDFS/object-store path for
+        EVERY pin in the library — survives executor loss at the
+        cost of a distributed-FS write + read. The MLlib convention
+        (ALS, GraphFrames checkpoint only when a dir is set)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=True)
+    return df.checkpoint(eager=True)
 
 
 def spine_running(
@@ -646,7 +620,6 @@ def spine_running(
     out_col: str,
     fn: str = "sum",
     inclusive: bool = True,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Running aggregate over a TINY keyed spine frame (months,
     deciles, distinct latencies — cardinality bounded by the domain,
@@ -661,9 +634,9 @@ def spine_running(
     strictly-preceding rows) — the caller decides the fill.
 
     The spine itself is tiny but its DERIVATION (usually an agg over
-    the fact) is not, and it feeds both join sides — materialized
-    once up front (see _materialize_once)."""
-    df = _materialize_once(df, materialize)
+    the fact) is not, and it feeds both join sides — pinned once up
+    front (see pin)."""
+    df = pin(df)
     agg_fn = getattr(F, fn)
     a = df.alias("_sa")
     b = df.select(order_col, agg_col).alias("_sb")
@@ -687,7 +660,6 @@ def range_rank(
     ntile_col: str = "tile",
     total_col: str | None = None,
     buckets: int | None = None,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Global row_number / ntile over an arbitrarily large frame with
     NO single-partition window — the scale-safe replacement for
@@ -726,14 +698,13 @@ def range_rank(
     row count (replaces `F.count().over(Window.partitionBy())`).
 
     Cost at 100 TB: the input frame is MATERIALIZED ONCE up front
-    (eager localCheckpoint — see _materialize_once; relying on AQE
-    stage reuse across the three differently-projected branches was
-    measured NOT to hold, which meant one upstream fact scan per
-    branch), then one cheap pass over the compact materialized rows
-    for min/max, one for band counts, and one hash shuffle for the
-    rank — nothing ever funnels through one task. Pass
-    materialize="none" only when the input is itself a cheap scan."""
-    df = _materialize_once(df, materialize)
+    (see pin; relying on AQE stage reuse across the three
+    differently-projected branches was measured NOT to hold, which
+    meant one upstream fact scan per branch), then one cheap pass
+    over the compact materialized rows for min/max, one for band
+    counts, and one hash shuffle for the rank — nothing ever funnels
+    through one task."""
+    df = pin(df)
     spark = df.sparkSession
     nb = buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     kd = key.cast("double")
@@ -799,7 +770,6 @@ def range_cumsum(
     out_col: str = "prefix",
     inclusive: bool = False,
     buckets: int | None = None,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Global prefix SUM over an arbitrarily large frame with NO
     single-partition window — `range_rank`'s trick applied to a
@@ -821,10 +791,25 @@ def range_cumsum(
     0 for the first row) — the form offsets/packing need;
     ``inclusive=True`` adds the current row's value.
 
-    Cost at 100 TB: input materialized once (see _materialize_once),
-    one cheap min/max pass, one per-band-sum pass, one hash exchange
-    for the windowed pass. Nothing funnels through one task."""
-    df = _materialize_once(df, materialize)
+    Cost at 100 TB: input pinned once (see pin), one cheap min/max
+    pass, one per-band-sum pass, one hash exchange for the windowed
+    pass. Nothing funnels through one task."""
+    return _range_cumsum(
+        pin(df), key, val, order, out_col, inclusive, buckets
+    )
+
+
+def _range_cumsum(
+    df: DataFrame,
+    key: Column,
+    val: Column,
+    order: Sequence[Column],
+    out_col: str = "prefix",
+    inclusive: bool = False,
+    buckets: int | None = None,
+) -> DataFrame:
+    """range_cumsum's body over an input the caller has ALREADY
+    pinned (or that is itself a cheap scan): no second pin."""
     spark = df.sparkSession
     nb = buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     kd = key.cast("double")
@@ -939,7 +924,6 @@ def ordered_export(
     key_col: str = "_sort_key",
     band_col: str = "_band",
     mode: str = "overwrite",
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """Globally-ordered corpus export (curriculum ordering): write
     `df` sorted by `key` across `bands` directory shards such that
@@ -964,7 +948,7 @@ def ordered_export(
     band. The curriculum consumer (a training-data loader walking
     easy→hard) streams band dirs in order and never needs a global
     sort on its side."""
-    df = _materialize_once(df, materialize)
+    df = pin(df)
     kd = key.cast("double")
     lo, hi = df.agg(F.min(kd).alias("_lo"), F.max(kd).alias("_hi")).first()
     if bands > 1 and lo is not None and hi > lo:

@@ -29,7 +29,6 @@ def key_skew_profile(
     keys: Sequence[str],
     top: int = 20,
     n_partitions: int = 200,
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """The `top` hottest grouping/join keys with exact skew numbers —
     what you read before deciding to salt, broadcast, or AQE-split a
@@ -54,7 +53,7 @@ def key_skew_profile(
     if top < 1 or n_partitions < 1:
         raise ValueError(f"top/n_partitions must be >= 1: {top}/{n_partitions}")
     spine = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-    spine = pin(spine, materialize)
+    spine = pin(spine)
     tot = spine.agg(
         F.sum("cnt").alias("n_total"), F.count(F.lit(1)).alias("n_keys")
     )
@@ -87,7 +86,6 @@ def join_cardinality(
     left: DataFrame,
     right: DataFrame,
     keys: Sequence[str],
-    materialize: str = "local_checkpoint",
 ) -> DataFrame:
     """EXACT inner-equi-join output cardinality on `keys` without
     running the join: |A ⋈ B| = Σ_k a_k·b_k over per-key counts —
@@ -111,12 +109,8 @@ def join_cardinality(
     for k in keys:
         c = F.col(k).isNotNull()
         nn = c if nn is None else (nn & c)
-    lcnt = pin(
-        left.groupBy(*keys).agg(F.count(F.lit(1)).alias("_lc")), materialize
-    )
-    rcnt = pin(
-        right.groupBy(*keys).agg(F.count(F.lit(1)).alias("_rc")), materialize
-    )
+    lcnt = pin(left.groupBy(*keys).agg(F.count(F.lit(1)).alias("_lc")))
+    rcnt = pin(right.groupBy(*keys).agg(F.count(F.lit(1)).alias("_rc")))
     # *_rows count every row (incl. NULL-key rows); *_keys count only
     # matchable (non-NULL) key groups, as the docstring states —
     # counting the NULL group as a "key" disagreed with the

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadron_spark.operators.ops import pin
+
 
 def stream_tap(
     spark: SparkSession,
@@ -269,7 +271,7 @@ def foreach_batch_upsert(
     def apply(batch_df, batch_id):
         spark = batch_df.sparkSession
         _recover_swap(spark, target_path)
-        batch_df = batch_df.localCheckpoint(eager=True)  # detach from stream plan
+        batch_df = pin(batch_df)  # detach from stream plan
         if fs.exists(spark, target_path):
             target = spark.read.parquet(target_path)
             merged = merge_upsert(target, batch_df, keys)
@@ -443,7 +445,7 @@ def gram_apply_fn(
             if hwm_row and batch_id <= int(hwm_row[0]["gx"]):
                 return  # replayed batch: already merged exactly once
         part = _E.gram_partials(
-            batch_df.localCheckpoint(eager=True), vec_col=vec_col, quant=q
+            pin(batch_df), vec_col=vec_col, quant=q
         )
         if prev is not None:
             merged = (
@@ -608,7 +610,7 @@ def substring_dedup_apply_fn(
             if batch_id <= hwm:
                 return
         store_fps = _substring_read_fps(spark, state_path, hwm, base, segs)
-        batch = batch_df.localCheckpoint(eager=True)
+        batch = pin(batch_df)
         if store_fps is not None:
             cleaned = exact_substring_dedup_incremental(
                 batch, store_fps, id_col, text_col, window
@@ -620,9 +622,7 @@ def substring_dedup_apply_fn(
             cleaned = batch.select(
                 id_col, text_col, F.array_join(toks, " ").alias("clean_text")
             )
-        cleaned = cleaned.filter(F.col("clean_text") != "").localCheckpoint(
-            eager=True
-        )
+        cleaned = pin(cleaned.filter(F.col("clean_text") != ""))
         cleaned.write.mode("overwrite").parquet(
             f"{out_path}/batch={int(batch_id)}"
         )
@@ -847,7 +847,7 @@ def cms_apply_fn(
             if hwm_row and batch_id <= int(hwm_row[0]["cnt"]):
                 return  # replayed batch: already merged exactly once
         part = _ops.cms_build(
-            batch_df.localCheckpoint(eager=True),
+            pin(batch_df),
             key,
             depth=depth,
             width=width,
@@ -937,7 +937,7 @@ def hll_apply_fn(
         from hadron_spark.sources import fs
 
         part = _sketch.hll_rollup(
-            batch_df.localCheckpoint(eager=True), keys, col, lg_k=lg_k
+            pin(batch_df), keys, col, lg_k=lg_k
         )
         if fs.exists(spark, state_path):
             prev = spark.read.parquet(state_path)
@@ -997,7 +997,7 @@ def moments_apply_fn(state_path: str, key: str, value: str):
                 return  # replayed batch: already merged exactly once
         y = F.col(value).cast("long")
         part = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(F.col(key).isNotNull())
             .groupBy(key)
             .agg(
@@ -1112,7 +1112,7 @@ def topk_apply_fn(
             if hwm and batch_id <= int(hwm[0]["n"]):
                 return
         part = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(F.col(key).isNotNull())
             .select(
                 key,
@@ -1240,7 +1240,7 @@ def histogram_apply_fn(
             .cast("int")
         )
         part = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(F.col(key).isNotNull())
             .select(key, b.alias("bin"))
             .groupBy(key, "bin")
@@ -1397,7 +1397,7 @@ def transitions_apply_fn(
             if hwm and batch_id <= int(hwm[0]["n"]):
                 return  # replayed batch: already merged exactly once
         b = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(F.col(entity).isNotNull() & F.col(state_col).isNotNull())
             .select(
                 F.col(entity).alias("e"),
@@ -1591,7 +1591,7 @@ def ewma_apply_fn(
             if hwm and batch_id <= int(hwm[0]["n"]):
                 return  # replayed batch: already merged exactly once
         rows = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(
                 F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
             )
@@ -1771,12 +1771,10 @@ def neardup_apply_fn(
             _neardup_check_params(md, num_hashes, bands, store_buckets)
             if batch_id <= hwm:
                 return  # replayed batch: partitions already committed
-        batch = batch_df.localCheckpoint(eager=True)
+        batch = pin(batch_df)
         new_sigs = minhash_signature(
             batch, text_col, num_hashes, shingle_k, id_col
         ).select(F.col(id_col).alias("_id"), "sig")
-        from hadron_spark.operators.ops import pin
-
         new_sigs = pin(new_sigs)
         dup_ids = _neardup_probe(
             spark, state_path, new_sigs, hwm, base,
@@ -1793,7 +1791,7 @@ def neardup_apply_fn(
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
             max_bucket_size=max_bucket_size,
         )
-        kept = kept.localCheckpoint(eager=True)
+        kept = pin(kept)
         kept.write.mode("overwrite").parquet(
             state_path.rstrip("/") + f"/kept/batch={batch_id}"
         )
@@ -2328,7 +2326,7 @@ def cusum_apply_fn(
             if hwm and batch_id <= int(hwm[0]["n"]):
                 return  # replayed batch: already merged exactly once
         rows = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(
                 F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
             )
@@ -2536,7 +2534,7 @@ def holt_winters_apply_fn(
             if hwm and batch_id <= int(hwm[0]["n"]):
                 return  # replayed batch: already merged exactly once
         rows = (
-            batch_df.localCheckpoint(eager=True)
+            pin(batch_df)
             .filter(
                 F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
             )

@@ -1528,12 +1528,10 @@ def test_corpus_report_null_group_sentinel(spark):
     assert abs(rep["share:en"] - 2 / 3) < 1e-12
 
 
-def test_repeated_spans_materialize_modes_identical(spark, tmp_path):
-    """All four materialize modes (recompute / bloom / pinned) are
-    plan variants of the same operator — byte-identical span
-    reports; bad mode names rejected."""
-    import pytest
-
+def test_repeated_spans_window_plan(spark):
+    """repeated_spans runs ONE plan: the corpus-wide fingerprint
+    count is a WindowExec over the position table (no join back to
+    it). Span report and cleaned text are stated explicitly."""
     from hadron_spark.llm.dedup import exact_substring_dedup, repeated_spans
 
     df = spark.createDataFrame(
@@ -1546,37 +1544,29 @@ def test_repeated_spans_materialize_modes_identical(spark, tmp_path):
         "doc_id long, text string",
     )
 
-    def spans(mode):
-        return sorted(
-            (r.doc_id, r.span_start, r.span_end, r.n_positions)
-            for r in repeated_spans(df, window=4, materialize=mode).collect()
-        )
-
-    base = spans("recompute")
-    assert base  # fixture has repeats
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    for mode in ("bloom", "window", "local_checkpoint", "checkpoint", "auto"):
-        assert spans(mode) == base, mode
-
-    # auto resolves to the one-pass window plan (optimization r07);
+    spans = repeated_spans(df, window=4)
+    # "a b c d" / "b c d e" repeat across docs 1 and 2 (one island
+    # each); "p q r s" repeats inside doc 4 at positions 0 and 4,
+    # which do not overlap, so they stay two islands
+    assert sorted(
+        (r.doc_id, r.span_start, r.span_end, r.n_positions)
+        for r in spans.collect()
+    ) == [(1, 0, 5, 2), (2, 1, 6, 2), (4, 0, 4, 1), (4, 4, 8, 1)]
     # the plan must contain a Window node and no second evaluation
     # of the position table (no join back)
-    auto_plan = repeated_spans(df, window=4)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in auto_plan
-    assert "Join" not in auto_plan
+    plan = spans._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in plan
+    assert "Join" not in plan
     clean = sorted(
-        (r.doc_id, r.clean_text)
-        for r in exact_substring_dedup(
-            df, window=4, materialize="bloom"
-        ).collect()
-    )
-    clean2 = sorted(
         (r.doc_id, r.clean_text)
         for r in exact_substring_dedup(df, window=4).collect()
     )
-    assert clean == clean2
-    with pytest.raises(ValueError, match="materialize"):
-        repeated_spans(df, materialize="nope")
+    assert clean == [
+        (1, "tail one"),
+        (2, "x y z w q"),
+        (3, "no repeats in this document at all"),
+        (4, "end"),
+    ]
 
 
 def test_dhash_image_dedup_stub_pipeline(spark):
@@ -1927,17 +1917,12 @@ def test_select_token_budget_prefix_cut(spark):
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens", "score"])
     got = sorted(
         (r["doc_id"], r["cum_tokens"])
-        for r in select_token_budget(
-            df, 12, "score", "n_tokens", materialize="none"
-        ).collect()
+        for r in select_token_budget(df, 12, "score", "n_tokens").collect()
     )
     # cums: 3->5, 1->9, 4->12 (kept), 2->22 (over budget)
     assert got == [(1, 9), (3, 5), (4, 12)]
     # budget below the first doc keeps nothing
-    assert (
-        select_token_budget(df, 4, "score", "n_tokens", materialize="none").count()
-        == 0
-    )
+    assert select_token_budget(df, 4, "score", "n_tokens").count() == 0
 
 
 def test_decontaminate_spans_surgical(spark):

@@ -539,12 +539,10 @@ def test_range_rank_matches_builtin_window(spark):
 
 
 def test_range_rank_reliable_checkpoint(spark, tmp_path):
-    """materialize='checkpoint' (reliable, executor-loss-resilient)
-    must produce the identical ranking with the identical plan shape
-    — exactly one exchange downstream of the materialized input —
-    and raise a clear error when no checkpoint dir is configured."""
-    import pytest
-
+    """With a checkpoint dir set, range_rank's pin is a reliable
+    (executor-loss-resilient) checkpoint and must produce the
+    identical ranking with the identical plan shape — exactly one
+    exchange downstream of the materialized input."""
     from hadron_spark.operators.ops import range_rank
     from hadron_spark.plans.inspect import shuffle_count
 
@@ -552,29 +550,24 @@ def test_range_rank_reliable_checkpoint(spark, tmp_path):
         [(i, (i * 37) % 101) for i in range(500)], "id long, v long"
     ).repartition(8)
 
-    sc = spark.sparkContext
-    had = not sc._jsc.sc().getCheckpointDir().isEmpty()
-    if not had:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            range_rank(
-                df, F.col("v"), [F.col("v"), F.col("id")],
-                materialize="checkpoint",
-            )
-    sc.setCheckpointDir(str(tmp_path / "reliable_ckpt"))
-    got = range_rank(
-        df,
-        F.col("v"),
-        [F.col("v"), F.col("id")],
-        rank_col="rn",
-        buckets=7,
-        materialize="checkpoint",
-    )
-    # one exchange: the within-band sort/rank shuffle; the reliable
-    # checkpoint read replaces the input lineage
-    assert shuffle_count(got) == 1
-    ranks = [r.rn for r in got.orderBy("v", "id").collect()]
-    assert ranks == sorted(ranks) and len(ranks) == 500
-    assert ranks[0] == 1 and ranks[-1] == 500
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "reliable_ckpt"))
+    try:
+        got = range_rank(
+            df,
+            F.col("v"),
+            [F.col("v"), F.col("id")],
+            rank_col="rn",
+            buckets=7,
+        )
+        # one exchange: the within-band sort/rank shuffle; the
+        # reliable checkpoint read replaces the input lineage
+        assert shuffle_count(got) == 1
+        ranks = [r.rn for r in got.orderBy("v", "id").collect()]
+        assert ranks == sorted(ranks) and len(ranks) == 500
+        assert ranks[0] == 1 and ranks[-1] == 500
+    finally:
+        # the session-scoped SparkContext is shared by every test
+        spark.sparkContext._jsc.setCheckpointDir(None)
 
 
 def test_spine_running_inclusive_exclusive(spark):
@@ -613,6 +606,44 @@ def test_pin_evaluates_once_and_preserves_rows(spark):
     j = pinned.alias("a").join(pinned.alias("b"), "g")
     jp = j._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" not in jp
+
+
+def test_pin_reliability_follows_checkpoint_dir(spark, tmp_path):
+    """Every pin in the library — ops.pin itself and the per-round
+    pins inside graph.connected_components — writes a reliable
+    checkpoint under the SparkContext's checkpoint dir when one is
+    set, and nothing there once it is unset (local checkpoints)."""
+    from hadron_spark.operators.graph import connected_components
+    from hadron_spark.operators.ops import pin
+
+    ckpt = tmp_path / "ckpt"
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+
+    def written():
+        return sorted(p.name for p in ckpt.rglob("rdd-*"))
+
+    def pinned_rows():
+        return sorted(tuple(r) for r in pin(spark.range(10)).collect())
+
+    def components():
+        return sorted(tuple(r) for r in connected_components(edges).collect())
+
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    try:
+        assert pinned_rows() == [(i,) for i in range(10)]
+        after_pin = written()
+        assert after_pin
+        comps = components()
+        assert comps == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+        after_cc = written()
+        assert len(after_cc) > len(after_pin)
+    finally:
+        # the session-scoped SparkContext is shared by every test
+        spark.sparkContext._jsc.setCheckpointDir(None)
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert pinned_rows() == [(i,) for i in range(10)]
+    assert components() == comps
+    assert written() == after_cc
 
 
 def test_grouping_sets_from_cells_matches_native(spark):
