@@ -7597,26 +7597,33 @@ def q176(spark, sf_dir):
     """,
 )
 def q177(spark, sf_dir):
-    """P11 tab wire format end-to-end (sources.pysource
-    .HadronLineDataSource — reference Protocol.hs lineC/parseLine):
-    documents staged as `source \t doc_id \t text` line files
-    (idempotent, one file per 100 docs so the source fans out
-    multi-partition), read back through the REGISTERED Python data
-    source with key_segments=2, then aggregated per source key. The
-    oracle computes the same accounting straight from the parquet
-    table — framing and unframing must be lossless for the hashes to
-    match."""
+    """P11 tab wire format end-to-end (sources.pysource.read_lines
+    through a `hadron_line` Tap — reference Protocol.hs
+    lineC/parseLine): documents staged as `source \t doc_id \t text`
+    line files (idempotent, one file per 100 docs so the scan fans
+    out multi-partition; the staging dir is keyed on the absolute
+    `sf_dir`, so two datasets never share staged lines), read back as
+    a JVM text scan plus one split with key_segments=2, then
+    aggregated per source key. The oracle computes the same
+    accounting straight from the parquet table — framing and
+    unframing must be lossless for the hashes to match."""
+    import hashlib
     import os
+    import shutil
 
     from hadron_spark.functions.text import tokenize
-    from hadron_spark.sources.pysource import HadronLineDataSource
 
-    spark.dataSource.register(HadronLineDataSource)
+    sf_abs = os.path.abspath(sf_dir)
     staged = os.path.join(
-        "/tmp", f"q177_lines_{os.path.basename(sf_dir.rstrip('/'))}"
+        "/tmp",
+        f"q177_lines_{os.path.basename(sf_abs)}_"
+        f"{hashlib.sha1(sf_abs.encode()).hexdigest()[:12]}",
     )
     if not os.path.isdir(staged) or not os.listdir(staged):
-        os.makedirs(staged, exist_ok=True)
+        # stage whole, then rename: a run cut mid-write never leaves a
+        # partial dir that later runs would reuse
+        tmp = f"{staged}.tmp{os.getpid()}"
+        os.makedirs(tmp, exist_ok=True)
         rows = (
             load(spark, sf_dir, "documents")
             .select("source", "doc_id", "text")
@@ -7624,18 +7631,17 @@ def q177(spark, sf_dir):
         )
         for i in range(0, len(rows), 100):
             with open(
-                os.path.join(staged, f"part-{i // 100:05d}.tsv"),
+                os.path.join(tmp, f"part-{i // 100:05d}.tsv"),
                 "w",
                 encoding="utf-8",
             ) as fh:
                 for r in rows[i : i + 100]:
                     fh.write(f"{r['source']}\t{r['doc_id']}\t{r['text']}\n")
-    lines = (
-        spark.read.format("hadron_line")
-        .option("path", staged)
-        .option("key_segments", "2")
-        .load()
-    )
+        try:
+            os.rename(tmp, staged)
+        except OSError:  # a concurrent run renamed its copy first
+            shutil.rmtree(tmp)
+    lines = Tap([staged], "hadron_line", options={"key_segments": "2"}).read(spark)
     return lines.groupBy(F.col("k1").alias("source")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokenize(F.col("value")))).alias("total_tokens"),

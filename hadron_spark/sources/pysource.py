@@ -1,5 +1,5 @@
-"""P11 — the reference's tab-separated line wire format as a REAL
-Spark data source (Python DataSource API, Spark 4).
+"""P11 — the reference's tab-separated line wire format: a JVM read
+plan plus a REAL Spark data sink (Python DataSource API, Spark 4).
 
 The reference's protocols serialize every record as
 `key-segment \\t key-segment \\t ... \\t value \\n` on the Hadoop
@@ -8,70 +8,53 @@ src/Hadron/Types.hs key-segment tabbing); COVERAGE previously mapped
 P11 to "n/a — schema'd columns replace the tab wire format". This
 module closes that last protocol row with a first-class source/sink:
 
+    df = Tap(paths, "hadron_line",
+             options={"key_segments": "2"}).read(spark)  # k1,k2,value
     spark.dataSource.register(HadronLineDataSource)
-    df = (spark.read.format("hadron_line")
-          .option("path", dir_or_glob).option("key_segments", "2")
-          .load())                      # k1,k2,value columns
     df.write.format("hadron_line").option("path", out_dir).save()
 
-Scale shape: one input partition PER FILE (the same unit a streaming
-mapper received), so a directory of N files fans out N-wide; .gz
-files decode transparently (the reference's gzip protocol wrapper,
-P6). The value keeps any tabs beyond the declared key segments —
-exactly parseLine's "split first k tabs" contract."""
+Reads never cross into Python: `read_lines` is Spark's text scan
+plus one `split`, the framing Hadoop's input format did before the
+streaming mapper saw a line. Scale shape is therefore Hadoop's
+`TextInputFormat`: plain files split and pack into partitions of at
+most `spark.sql.files.maxPartitionBytes` (each file also costs
+`spark.sql.files.openCostInBytes`, so small files get a partition
+each), while a `.gz` file is unsplittable and stays one partition;
+.gz decodes transparently (the reference's gzip protocol wrapper,
+P6). Lines end at `\\n` only, so a CRLF line keeps its `\\r` in the
+value. The value keeps any tabs beyond the declared key segments —
+exactly parseLine's "split first k tabs" contract — and a line with
+fewer segments pads the missing ones with `""`."""
 
 from __future__ import annotations
 
-import glob as _glob
-import gzip
-import io
 import os
 from typing import Iterator
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceWriter,
-    InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 
-def _expand(path: str) -> list[str]:
-    if os.path.isdir(path):
-        names = sorted(
-            f for f in os.listdir(path) if not f.startswith(("_", "."))
-        )
-        return [os.path.join(path, f) for f in names]
-    hits = sorted(_glob.glob(path))
-    if not hits:
-        raise FileNotFoundError(path)
-    return hits
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, file_path: str):
-        self.file_path = file_path
-
-
-class _LineReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.k = int(options.get("key_segments", "1"))
-
-    def partitions(self):
-        return [_FilePartition(f) for f in _expand(self.path)]
-
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        opener = gzip.open if partition.file_path.endswith(".gz") else open
-        with opener(partition.file_path, "rb") as fh:
-            for raw in io.BufferedReader(fh):
-                line = raw.decode("utf-8").rstrip("\n")
-                parts = line.split("\t", self.k)
-                if len(parts) <= self.k:
-                    parts = parts + [""] * (self.k + 1 - len(parts))
-                yield tuple(parts)
+def read_lines(spark: SparkSession, paths: list[str], key_segments: int) -> DataFrame:
+    """(k1..kN, value) string rows over tab-framed line files, as a
+    JVM plan: text scan, one `split(value, '\\t', N+1)`, projection.
+    `get` (NULL when out of range; ANSI `[]` raises) + `coalesce`
+    pad a short line's missing segments with `""`."""
+    parts = (
+        spark.read.option("lineSep", "\n")
+        .text(paths)
+        .select(F.split("value", "\t", key_segments + 1).alias("_parts"))
+    )
+    cols = [f"k{i + 1}" for i in range(key_segments)] + ["value"]
+    return parts.select(
+        *(F.coalesce(F.get("_parts", i), F.lit("")).alias(c) for i, c in enumerate(cols))
+    )
 
 
 class _LineWriterMessage(WriterCommitMessage):
@@ -103,21 +86,13 @@ class _LineWriter(DataSourceWriter):
 
 
 class HadronLineDataSource(DataSource):
-    """`hadron_line` format: (k1..kN string, value string) rows over
-    tab-framed line files, one partition per file."""
+    """`hadron_line` sink: writes each row as its columns joined by
+    tabs, one `part-NNNNN.tsv` per partition. Sink only — reads go
+    through `Tap(paths, "hadron_line").read(spark)` (`read_lines`)."""
 
     @classmethod
     def name(cls) -> str:
         return "hadron_line"
-
-    def schema(self) -> StructType:
-        k = int(self.options.get("key_segments", "1"))
-        fields = [StructField(f"k{i + 1}", StringType()) for i in range(k)]
-        fields.append(StructField("value", StringType()))
-        return StructType(fields)
-
-    def reader(self, schema: StructType) -> _LineReader:
-        return _LineReader(dict(self.options))
 
     def writer(self, schema: StructType, overwrite: bool) -> _LineWriter:
         return _LineWriter(dict(self.options), schema)

@@ -23,6 +23,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadron_spark.sources.pysource import read_lines
+
 # Protocol-name → Spark format. Mirrors reference Protocol constructors:
 #   idProtocol/linesProtocol (Protocol.hs:138-145)  → text
 #   csvProtocol (Protocol.hs:171-172)               → csv
@@ -66,6 +68,8 @@ class Tap:
 
     # --- source ---------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
+        if self.fmt == "hadron_line":  # P11: a JVM text scan, no Python reader
+            return read_lines(spark, self.paths, int(self.options.get("key_segments", "1")))
         reader = spark.read.format(self.fmt).options(**self.options)
         if self.schema:
             reader = reader.schema(self.schema)

@@ -142,12 +142,10 @@ def test_tap_orc_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_hadron_line_datasource_roundtrip(spark, tmp_path):
-    """P11 line wire format as a real Python DataSource: per-file
-    partitions, transparent .gz, tabs beyond the key segments stay in
-    the value (parseLine's split-first-k contract), write round-trips
-    via tmp-then-rename part files."""
-    import gzip
-
+    """P11 line wire format: the tap reads a dir of small files one
+    partition each, transparent .gz, tabs beyond the key segments stay
+    in the value (parseLine's split-first-k contract), and the
+    registered sink round-trips via tmp-then-rename part files."""
     from hadron_spark.sources.pysource import HadronLineDataSource
 
     spark.dataSource.register(HadronLineDataSource)
@@ -157,12 +155,7 @@ def test_hadron_line_datasource_roundtrip(spark, tmp_path):
     with gzip.open(tmp_path / "b.tsv.gz", "wt") as fh:
         fh.write("u3\tclick\tz\n")
 
-    df = (
-        spark.read.format("hadron_line")
-        .option("path", str(tmp_path))
-        .option("key_segments", "2")
-        .load()
-    )
+    df = Tap([str(tmp_path)], "hadron_line", options={"key_segments": "2"}).read(spark)
     rows = {tuple(r) for r in df.collect()}
     assert ("u1", "click", "page=/home extra\ttabbed") in rows
     assert ("u3", "click", "z") in rows
@@ -170,10 +163,81 @@ def test_hadron_line_datasource_roundtrip(spark, tmp_path):
 
     out = str(tmp_path / "out")
     df.write.format("hadron_line").option("path", out).mode("append").save()
-    back = (
-        spark.read.format("hadron_line")
-        .option("path", out)
-        .option("key_segments", "2")
-        .load()
-    )
+    back = Tap([out], "hadron_line", options={"key_segments": "2"}).read(spark)
     assert {tuple(r) for r in back.collect()} == rows
+
+
+def _line_tap(path, k: int) -> Tap:
+    return Tap([str(path)], "hadron_line", options={"key_segments": str(k)})
+
+
+def test_hadron_line_edge_rows(spark, tmp_path):
+    """parseLine framing on edge lines: CRLF keeps its `\\r` (lines end
+    at `\\n` only), a short line pads with "", an empty line is all "",
+    and tabs past segment k stay in the value."""
+    p = tmp_path / "edge.tsv"
+    p.write_bytes(b"u1\tclick\tv\r\nshort\n\nu2\tx\ty\tz\t\n")
+    rows = sorted(tuple(r) for r in _line_tap(p, 2).read(spark).collect())
+    assert rows == [
+        ("", "", ""),
+        ("short", "", ""),
+        ("u1", "click", "v\r"),
+        ("u2", "x", "y\tz\t"),
+    ]
+    assert _line_tap(p, 2).read(spark).columns == ["k1", "k2", "value"]
+
+
+def test_hadron_line_multi_path_plain_and_gz(spark, tmp_path):
+    (tmp_path / "a.tsv").write_text("a\t1\nb\t2\n")
+    with gzip.open(tmp_path / "b.tsv.gz", "wt") as fh:
+        fh.write("c\t3\td\n")
+    t = Tap(
+        [str(tmp_path / "a.tsv"), str(tmp_path / "b.tsv.gz")],
+        "hadron_line",
+        options={"key_segments": "1"},
+    )
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        ("a", "1"),
+        ("b", "2"),
+        ("c", "3\td"),
+    ]
+
+
+def test_hadron_line_splits_large_plain_file(spark, tmp_path):
+    """A plain file bigger than maxPartitionBytes splits like Hadoop's
+    TextInputFormat: several partitions, every line read exactly once."""
+    p = tmp_path / "big.tsv"
+    p.write_text("".join(f"key{i % 7}\t{i}\n" for i in range(5000)))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        df = _line_tap(p, 1).read(spark)
+        assert df.rdd.getNumPartitions() > 1
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(rows, key=lambda r: int(r[1])) == [
+        (f"key{i % 7}", str(i)) for i in range(5000)
+    ]
+
+
+def test_hadron_line_read_is_a_jvm_scan(spark, tmp_path):
+    """Plan guard: the tap reads through Spark's text scan, not a
+    Python data source, so no Python boundary sits under the mapper."""
+    p = tmp_path / "a.tsv"
+    p.write_text("a\tb\n")
+    plan = _line_tap(p, 1).read(spark)._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan
+    assert "(Python)" not in plan
+
+
+def test_with_input_file_on_line_tap(spark, tmp_path):
+    """with_input_file (reference getFileName) names each line's file
+    on a hadron_line tap."""
+    from hadron_spark.sources.taps import with_input_file
+
+    p = tmp_path / "a.tsv"
+    p.write_text("k\tv\nk2\tv2\n")
+    files = {r["input_file"] for r in with_input_file(_line_tap(p, 1).read(spark)).collect()}
+    assert files == {p.as_uri()}
