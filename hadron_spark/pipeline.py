@@ -41,12 +41,11 @@ RS_SKIP = "skip"  # output exists → skip compute (memoized restart)
 def _output_exists(spark: SparkSession, path: str) -> bool:
     """Committed-output check via the Hadoop FileSystem client (works
     for file://, hdfs://, s3a:// alike): the committer's _SUCCESS
-    marker, or a non-empty directory."""
+    marker, which every `Tap.write` leaves; a dir without it holds
+    debris of a write that never committed."""
     from hadron_spark.sources import fs
 
-    if fs.exists(spark, os.path.join(path, "_SUCCESS")):
-        return True
-    return fs.exists(spark, path) and bool(fs.ls(spark, path))
+    return fs.exists(spark, os.path.join(path, "_SUCCESS"))
 
 
 @dataclass
@@ -128,7 +127,9 @@ class Pipeline:
         dfs = [t.read(self.spark) for t in inputs]
         self.spark.sparkContext.setJobDescription(f"hadron_spark step: {name}")
         result = transform(*dfs) if dfs else transform(self.spark)
-        mode = "overwrite" if self.rerun == RS_RERUN else "error"
+        # RS_SKIP overwrites an uncommitted output's debris; RS_FAIL
+        # still refuses it through Spark's error-if-exists
+        mode = "error" if self.rerun == RS_FAIL else "overwrite"
         out.write(result, mode=mode, partition_by=partition_by)
         self.steps.append(StepResult(name, out, skipped=False))
         return out

@@ -7600,11 +7600,12 @@ def q177(spark, sf_dir):
     """P11 tab wire format end-to-end (sources.pysource.read_lines
     through a `hadron_line` Tap — reference Protocol.hs
     lineC/parseLine): documents staged as `source \t doc_id \t text`
-    line files (idempotent, one file per 100 docs so the scan fans
-    out multi-partition; the staging dir is keyed on the absolute
-    `sf_dir`, so two datasets never share staged lines), read back as
-    a JVM text scan plus one split with key_segments=2, then
-    aggregated per source key. The oracle computes the same
+    line files through the tap's own writer (idempotent, at most 100
+    docs per file so the scan fans out multi-partition; the staging
+    dir is keyed on the absolute `sf_dir`, so two datasets never share
+    staged lines; a NULL cell stages as ""), read back as a JVM text
+    scan plus one split with key_segments=2, then aggregated per
+    source key. The oracle computes the same
     accounting straight from the parquet table — framing and
     unframing must be lossless for the hashes to match."""
     import hashlib
@@ -7623,20 +7624,10 @@ def q177(spark, sf_dir):
         # stage whole, then rename: a run cut mid-write never leaves a
         # partial dir that later runs would reuse
         tmp = f"{staged}.tmp{os.getpid()}"
-        os.makedirs(tmp, exist_ok=True)
-        rows = (
-            load(spark, sf_dir, "documents")
-            .select("source", "doc_id", "text")
-            .collect()
+        docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
+        Tap([tmp], "hadron_line", options={"maxRecordsPerFile": "100"}).write(
+            docs, mode="overwrite"
         )
-        for i in range(0, len(rows), 100):
-            with open(
-                os.path.join(tmp, f"part-{i // 100:05d}.tsv"),
-                "w",
-                encoding="utf-8",
-            ) as fh:
-                for r in rows[i : i + 100]:
-                    fh.write(f"{r['source']}\t{r['doc_id']}\t{r['text']}\n")
         try:
             os.rename(tmp, staged)
         except OSError:  # a concurrent run renamed its copy first

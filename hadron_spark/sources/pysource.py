@@ -1,5 +1,5 @@
-"""P11 — the reference's tab-separated line wire format: a JVM read
-plan plus a REAL Spark data sink (Python DataSource API, Spark 4).
+"""P11 — the reference's tab-separated line wire format, read and
+written as JVM plans (Spark's text scan and text writer).
 
 The reference's protocols serialize every record as
 `key-segment \\t key-segment \\t ... \\t value \\n` on the Hadoop
@@ -8,10 +8,9 @@ src/Hadron/Types.hs key-segment tabbing); COVERAGE previously mapped
 P11 to "n/a — schema'd columns replace the tab wire format". This
 module closes that last protocol row with a first-class source/sink:
 
-    df = Tap(paths, "hadron_line",
-             options={"key_segments": "2"}).read(spark)  # k1,k2,value
-    spark.dataSource.register(HadronLineDataSource)
-    df.write.format("hadron_line").option("path", out_dir).save()
+    t = Tap(paths, "hadron_line", options={"key_segments": "2"})
+    df = t.read(spark)                      # k1, k2, value
+    Tap(out_dir, "hadron_line").write(df)   # write_lines
 
 Reads never cross into Python: `read_lines` is Spark's text scan
 plus one `split`, the framing Hadoop's input format did before the
@@ -24,20 +23,17 @@ each), while a `.gz` file is unsplittable and stays one partition;
 P6). Lines end at `\\n` only, so a CRLF line keeps its `\\r` in the
 value. The value keeps any tabs beyond the declared key segments —
 exactly parseLine's "split first k tabs" contract — and a line with
-fewer segments pads the missing ones with `""`."""
+fewer segments pads the missing ones with `""`.
+
+Writes stay in the JVM too: `write_lines` frames rows with `concat_ws`
+for Spark's text writer, whose committer does the tmp-then-rename
+finalize of the reference's FanOut (Run/FanOut.hs)."""
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import StructType
 
 
@@ -57,42 +53,37 @@ def read_lines(spark: SparkSession, paths: list[str], key_segments: int) -> Data
     )
 
 
-class _LineWriterMessage(WriterCommitMessage):
-    def __init__(self, path: str, rows: int):
-        self.path = path
-        self.rows = rows
-
-
-class _LineWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema: StructType):
-        self.path = options["path"]
-        self.n_cols = len(schema.fields)
-
-    def write(self, rows: Iterator) -> _LineWriterMessage:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        out = os.path.join(self.path, f"part-{pid:05d}.tsv")
-        tmp = out + "._tmp"  # tmp-then-rename, the FanOut.hs contract
-        n = 0
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for row in rows:
-                fh.write("\t".join("" if v is None else str(v) for v in row))
-                fh.write("\n")
-                n += 1
-        os.replace(tmp, out)
-        return _LineWriterMessage(out, n)
+def write_lines(
+    df: DataFrame, path: str, mode: str, partition_by: list[str], options: dict
+) -> None:
+    """Spark's text writer over the non-partition columns, each CAST to
+    string with NULL → `""`, joined by tabs. The cast comes first:
+    `concat_ws` skips NULLs (shifting later columns) and flattens
+    arrays. A tab or newline inside a cell is written unescaped."""
+    cells = [
+        F.coalesce(F.col("`" + c.replace("`", "``") + "`").cast("string"), F.lit(""))
+        for c in df.columns
+        if c not in partition_by
+    ]
+    (
+        df.select(F.concat_ws("\t", *cells).alias("value"), *partition_by)
+        .write.options(**options)
+        .mode(mode)
+        .partitionBy(*partition_by)
+        .text(path)
+    )
 
 
 class HadronLineDataSource(DataSource):
-    """`hadron_line` sink: writes each row as its columns joined by
-    tabs, one `part-NNNNN.tsv` per partition. Sink only — reads go
-    through `Tap(paths, "hadron_line").read(spark)` (`read_lines`)."""
+    """Keeps the `hadron_line` name registered. It neither reads nor
+    writes: `Tap(paths, "hadron_line")` reads and writes as JVM plans,
+    and `df.write.format("hadron_line")` raises, pointing there."""
 
     @classmethod
     def name(cls) -> str:
         return "hadron_line"
 
-    def writer(self, schema: StructType, overwrite: bool) -> _LineWriter:
-        return _LineWriter(dict(self.options), schema)
+    def writer(self, schema: StructType, overwrite: bool):
+        raise NotImplementedError(
+            'hadron_line has no data source writer; write with Tap(path, "hadron_line").write(df)'
+        )

@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadron_spark.sources.pysource import read_lines
+from hadron_spark.sources.pysource import read_lines, write_lines
 
 # Protocol-name → Spark format. Mirrors reference Protocol constructors:
 #   idProtocol/linesProtocol (Protocol.hs:138-145)  → text
@@ -82,6 +82,13 @@ class Tap:
         mode: str = "error",
         partition_by: list[str] | None = None,
     ) -> None:
+        """Write through Spark's committer (`_SUCCESS`, every save mode).
+        A `hadron_line` tap writes one tab-framed line per row; cells are
+        Spark's string CAST, not Python's `str` (NULL `""`, `true`,
+        `1.0E20`, `[a, b]`), into `part-NNNNN-<uuid>-c000.txt[.gz]`
+        files, not `part-NNNNN.tsv`, so appends never collide."""
+        if self.fmt == "hadron_line":
+            return write_lines(df, self.paths[0], mode, partition_by or [], self.options)
         writer = df.write.format(self.fmt).options(**self.options).mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)

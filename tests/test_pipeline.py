@@ -62,3 +62,34 @@ def test_set_get_val_and_run_once(spark):
     for _ in range(3):
         pipe.run_once("expensive", lambda: calls.append(1) or "result")
     assert calls == [1]
+
+
+def test_rerun_fail_line_output(spark, tmp_path):
+    """RS_FAIL writes a line output when it is absent and refuses it
+    once committed."""
+    out = Tap([str(tmp_path / "lines")], "hadron_line")
+
+    def step(spark):
+        return spark.createDataFrame([("k", "v")], "k string, v string")
+
+    Pipeline(spark, rerun=RS_FAIL, workdir=str(tmp_path)).connect("s", step, [], out)
+    assert [tuple(r) for r in out.read(spark).collect()] == [("k", "v")]
+    with pytest.raises(FileExistsError):
+        Pipeline(spark, rerun=RS_FAIL, workdir=str(tmp_path)).connect("s", step, [], out)
+
+
+def test_rerun_skip_recomputes_uncommitted_output(spark, tmp_path):
+    """An output dir holding only `_temporary/` debris of a crashed
+    write has no `_SUCCESS`: RS_SKIP runs the step over it."""
+    out_dir = tmp_path / "lines"
+    (out_dir / "_temporary" / "0").mkdir(parents=True)
+    (out_dir / "_temporary" / "0" / "part-00000.txt").write_text("half\n")
+    out = Tap([str(out_dir)], "hadron_line")
+
+    def step(spark):
+        return spark.createDataFrame([("k", "v")], "k string, v string")
+
+    pipe = Pipeline(spark, rerun=RS_SKIP, workdir=str(tmp_path))
+    pipe.connect("s", step, [], out)
+    assert [s.skipped for s in pipe.steps] == [False]
+    assert [tuple(r) for r in out.read(spark).collect()] == [("k", "v")]

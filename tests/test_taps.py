@@ -5,6 +5,7 @@ from __future__ import annotations
 import gzip
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadron_spark.sources.taps import (
@@ -144,11 +145,8 @@ def test_tap_orc_roundtrip(spark, sf_dir, tmp_path):
 def test_hadron_line_datasource_roundtrip(spark, tmp_path):
     """P11 line wire format: the tap reads a dir of small files one
     partition each, transparent .gz, tabs beyond the key segments stay
-    in the value (parseLine's split-first-k contract), and the
-    registered sink round-trips via tmp-then-rename part files."""
-    from hadron_spark.sources.pysource import HadronLineDataSource
-
-    spark.dataSource.register(HadronLineDataSource)
+    in the value (parseLine's split-first-k contract), and a write
+    through the tap round-trips."""
     (tmp_path / "a.tsv").write_text(
         "u1\tclick\tpage=/home extra\ttabbed\nu2\tview\tx\n"
     )
@@ -162,13 +160,92 @@ def test_hadron_line_datasource_roundtrip(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 2  # one per file
 
     out = str(tmp_path / "out")
-    df.write.format("hadron_line").option("path", out).mode("append").save()
+    Tap([out], "hadron_line").write(df)
     back = Tap([out], "hadron_line", options={"key_segments": "2"}).read(spark)
     assert {tuple(r) for r in back.collect()} == rows
 
 
 def _line_tap(path, k: int) -> Tap:
     return Tap([str(path)], "hadron_line", options={"key_segments": str(k)})
+
+
+def _lines(spark, path) -> list[str]:
+    return sorted(r.value for r in spark.read.text(str(path)).collect())
+
+
+def test_hadron_line_write_cell_text(spark, tmp_path):
+    """Each cell is Spark's string CAST with NULL → "": the cast comes
+    before concat_ws, so a NULL keeps its column and an array stays
+    one cell."""
+    df = spark.sql(
+        "SELECT CAST(NULL AS STRING) AS s, true AS b, 1e20D AS d, "
+        "array('a', 'b') AS arr, 7 AS `n.dot`"
+    )
+    out = tmp_path / "cells"
+    Tap([str(out)], "hadron_line").write(df)
+    assert _lines(spark, out) == ["\ttrue\t1.0E20\t[a, b]\t7"]
+    assert _line_tap(out, 3).read(spark).collect()[0] == ("", "true", "1.0E20", "[a, b]\t7")
+
+
+def test_hadron_line_write_partition_by(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("a", 1, "x"), ("b", 2, "y"), ("a", 3, "z")], "p string, n int, v string"
+    )
+    out = tmp_path / "parts"
+    Tap([str(out)], "hadron_line").write(df, partition_by=["p"])
+    assert sorted(d for d in os.listdir(out) if not d.startswith(("_", "."))) == ["p=a", "p=b"]
+    assert _lines(spark, out / "p=a") == ["1\tx", "3\tz"]
+    assert _lines(spark, out / "p=b") == ["2\ty"]
+
+
+def test_hadron_line_write_gzip_roundtrip(spark, tmp_path):
+    df = spark.createDataFrame([("k1", "v 1"), ("k2", "v\t2")], "k string, v string")
+    out = tmp_path / "gz"
+    Tap([str(out)], "hadron_line", options={"compression": "gzip"}).write(df)
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert parts and all(f.endswith(".txt.gz") for f in parts)
+    assert sorted(tuple(r) for r in _line_tap(out, 1).read(spark).collect()) == [
+        ("k1", "v 1"),
+        ("k2", "v\t2"),
+    ]
+
+
+def test_hadron_line_overwrite_fewer_partitions(spark, tmp_path):
+    """An overwrite goes through the committer: a 2-partition rewrite
+    of a 4-partition output leaves none of the old part files, and
+    the write commits `_SUCCESS`."""
+    df = spark.range(10).selectExpr("CAST(id AS STRING) AS k", "'v' AS v")
+    out = tmp_path / "ow"
+    t = Tap([str(out)], "hadron_line")
+    t.write(df.repartition(4), mode="overwrite")
+    t.write(df.repartition(2), mode="overwrite")
+    assert sorted(int(r.k1) for r in _line_tap(out, 1).read(spark).collect()) == list(range(10))
+    assert (out / "_SUCCESS").exists()
+
+
+def test_hadron_line_appends_keep_both(spark, tmp_path):
+    df = spark.createDataFrame([("a", "1"), ("b", "2"), ("c", "3")], "k string, v string")
+    out = tmp_path / "app"
+    t = Tap([str(out)], "hadron_line")
+    t.write(df.filter("k < 'c'").coalesce(1), mode="append")
+    t.write(df.filter("k = 'c'").coalesce(1), mode="append")
+    assert _lines(spark, out) == ["a\t1", "b\t2", "c\t3"]
+    assert (out / "_SUCCESS").exists()
+
+
+def test_hadron_line_datasource_write_points_to_tap(spark, tmp_path):
+    """The registered `hadron_line` source has no writer of its own;
+    a write through it names the tap writer. (Spark refuses the
+    default error-if-exists mode for any Python data source before
+    the writer is asked, so this uses append.)"""
+    from pyspark.errors import AnalysisException
+
+    from hadron_spark.sources.pysource import HadronLineDataSource
+
+    spark.dataSource.register(HadronLineDataSource)
+    df = spark.createDataFrame([("a", "b")], "k string, v string")
+    with pytest.raises(AnalysisException, match=r'Tap\(path, "hadron_line"\)\.write'):
+        df.write.format("hadron_line").mode("append").save(str(tmp_path / "ds"))
 
 
 def test_hadron_line_edge_rows(spark, tmp_path):
