@@ -446,9 +446,14 @@ def hamming_near_pairs(
     chunk (a pair within distance d < blocks must agree on >= 1
     chunk), exact bit_count(xor) filter, oversized-bucket guard —
     bucketed equi-join, never n².  Input is one (id, hash long) row
-    per item."""
+    per item.
+
+    Built as ONE `spark.sql` string over a temp view of the pinned
+    hash table (as `simhash` is): the chunk explode, the
+    `count(1) OVER (PARTITION BY blk, ckey)` guard, the block
+    self-join, the hamming filter and the per-pair dedup parse once
+    instead of costing a py4j round trip per Column call."""
     width = 64 // blocks
-    h = hashes.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
     # same rationale as minhash_lsh_pairs: the fingerprint table is
     # tiny (id + one long per item) but feeds both join sides — EAGER
     # pin (ops.pin): a lazy persist still recomputes the upstream
@@ -457,44 +462,39 @@ def hamming_near_pairs(
     # plan for every downstream branch.
     from hadron_spark.operators.ops import pin as _pin
 
-    h = _pin(h)
-    chunked = h.select(
-        "_id",
-        "_h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftrightunsigned("_h", i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("ckey"),
-                    )
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("c"),
-    ).select("_id", "_h", "c.blk", "c.ckey")
-    if max_bucket_size:
-        chunked = _drop_oversized_buckets(chunked, ["blk", "ckey"], max_bucket_size)
-    a, b = chunked.alias("a"), chunked.alias("b")
-    hamming = F.bit_count(F.col("a._h").bitwiseXOR(F.col("b._h")))
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.blk") == F.col("b.blk"),
-                F.col("a.ckey") == F.col("b.ckey"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
-        .filter(hamming <= max_hamming)
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    h = _pin(hashes.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
+    _VIEW_SEQ[0] += 1
+    view = f"_hadron_hamming_in_{_VIEW_SEQ[0]}"
+    h.createOrReplaceTempView(view)
+    chunks = ", ".join(
+        f"named_struct('blk', {i}, 'ckey', "
+        f"shiftrightunsigned(_h, {i * width}) & {(1 << width) - 1})"
+        for i in range(blocks)
+    )
+    # the skew guard (see _drop_oversized_buckets): its window shuffle
+    # on (blk, ckey) is the self-join's partitioning, so the join
+    # reuses the exchange
+    guarded = (
+        f"""SELECT _id, _h, blk, ckey FROM (
+              SELECT *, count(1) OVER (PARTITION BY blk, ckey) AS _bn
+              FROM chunked)
+            WHERE _bn <= {max_bucket_size}"""
+        if max_bucket_size
+        else "SELECT * FROM chunked"
+    )
+    return h.sparkSession.sql(
+        f"""
+        WITH chunked AS (
+          SELECT _id, _h, c.blk, c.ckey
+          FROM (SELECT _id, _h, explode(array({chunks})) AS c FROM {view})),
+        guarded AS ({guarded}),
+        near AS (
+          SELECT a._id AS id_a, b._id AS id_b, bit_count(a._h ^ b._h) AS hamming
+          FROM guarded a JOIN guarded b
+            ON a.blk = b.blk AND a.ckey = b.ckey AND a._id < b._id
+          WHERE bit_count(a._h ^ b._h) <= {max_hamming})
+        SELECT id_a, id_b, first(hamming) AS hamming FROM near GROUP BY id_a, id_b
+        """
     )
 
 

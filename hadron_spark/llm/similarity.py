@@ -42,20 +42,45 @@ def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
 
 def hyperplane_bucket(vec: Column, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
     """Sign-pattern bucket id (0..2^n_planes-1) of `vec` against the
-    deterministic plane set — a pure expression (no UDF)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(_planes(dim, n_planes, seed)):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(p) for p in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return bucket
+    deterministic plane set — a pure expression (no UDF).
+
+    The n_planes × dim plane matrix ships as ONE parsed SQL literal
+    (`repr(p)D` doubles, never DECIMAL), and the bucket is one
+    `transform` over its rows — `IF(Σ vec·plane >= 0, 2^i, 0)` per
+    plane, the dot product the left-to-right `zip_with`/`aggregate`
+    fold — summed by one `aggregate`. Building each coefficient as its
+    own `F.lit` cost a py4j round trip per element (~2,500 at dim 64 ×
+    6 planes); this build costs a fixed ~250 whatever dim and n_planes
+    are. A NULL vector, a NULL element or a length other than dim
+    makes the plane's dot product NULL, which counts as bit 0.
+
+    The fold is deliberately not unrolled into per-element codegen
+    arithmetic (measured on a 4-core VM, local[2], 64 dims × 6 planes,
+    noop sink, min of 3): at 500 rows the unrolled form runs 0.47 s
+    against the fold's 0.25 s, and at 400k rows it wins only 6.3 s
+    against 6.8 s."""
+    matrix = ", ".join(
+        "array(" + ", ".join(f"{p!r}D" for p in plane) + ")"
+        for plane in _planes(dim, n_planes, seed)
+    )
+    planes = F.expr(f"array({matrix})")
+    bits = F.transform(
+        planes,
+        lambda p, i: F.when(
+            F.aggregate(
+                F.zip_with(vec, p, lambda x, y: x.cast("double") * y),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            >= 0,
+            F.call_function("shiftleft", F.lit(1).cast("long"), i),
+        ).otherwise(F.lit(0).cast("long")),
+    )
+    # an aggregate's accumulator is always typed nullable: the coalesce
+    # (never taken) keeps the bucket non-nullable, so the optimizer adds
+    # no isnotnull(bucket) filter that would evaluate it a second time
+    zero = F.lit(0).cast("long")
+    return F.coalesce(F.aggregate(bits, zero, lambda acc, x: acc + x), zero)
 
 
 def brute_force_topk(
@@ -256,7 +281,14 @@ def lsh_topk(
     Corpus is bucketed once (narrow); queries probe their own bucket
     plus `multiprobe` single-bit-flip neighbors (recall knob). The
     compare set shrinks by ~2^n_planes; the join is a plain bucket
-    equi-join that partitions cleanly at scale."""
+    equi-join that partitions cleanly at scale.
+
+    Precondition: `id_col` is unique in `corpus` and in `queries`.
+    Each corpus row has one bucket and the probes are distinct XORs of
+    the query's bucket, so under it every (query, neighbor) pair is
+    scored once and no dedup exchange is needed. A duplicated id is
+    not collapsed: each of its rows is kept and ranked as its own
+    neighbor."""
     probed_frac = (1 + multiprobe) / float(2**n_planes)
     if not assume_clustered and probed_frac < 0.5:
         import warnings
@@ -298,7 +330,6 @@ def lsh_topk(
             "neighbor_id",
             cosine_similarity(F.col("cvec"), F.col("qvec")).alias("cosine"),
         )
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

@@ -139,28 +139,37 @@ def _dec(c) -> F.Column:
 # is the documented precondition of dsum/dsum_dec/dprodsum):
 #  - inputs are finite doubles exactly representing ≤4-decimal values
 #    (x·10⁴ is an integer; all generator money columns are 2-decimal),
-#  - |x| < 9·10⁸ (then ulp(x) < 2·10⁻⁴, so the 4-decimal value is the
-#    ONLY ≤4-decimal value in x's rounding interval: Spark's decimal
-#    cast — HALF_UP of the shortest round-trip repr — and rint(x·10⁴)
-#    both recover the exact scaled integer; beyond the bound the two
-#    quantizations can legitimately differ by 1 unit, so the fast path
-#    fails CLOSED to NULL there, as it does for NaN and ±Inf),
-#  - fewer than 2⁴¹ ≈ 2.2·10¹² accepted rows per group (component sums
-#    stay under 2⁶³; ~10¹² rows per group at the 100 TB target).
+#  - |x| < 9·10⁸ takes the fast quantization (then ulp(x) < 2·10⁻⁴, so
+#    the 4-decimal value is the ONLY ≤4-decimal value in x's rounding
+#    interval: Spark's decimal cast — HALF_UP of the shortest
+#    round-trip repr — and rint(x·10⁴) both recover the exact scaled
+#    integer).  Beyond that bound the two quantizations can
+#    legitimately differ by 1 unit, so out-of-band rows fall back to
+#    the decimal cast itself, CAST(CAST(x AS DECIMAL(18,4)) * 10⁴ AS
+#    BIGINT): exact for |x| < 10¹⁴, NULL for NaN/±Inf, and past
+#    DECIMAL(18,4) the cast's own overflow path (NULL, or an error
+#    under ANSI) — the same answer the decimal accumulation gives,
+#    never a silently dropped row,
+#  - so |scaled| < 10¹⁸ and the sign-carrying component hi = s >> 42
+#    stays under 2¹⁸ (dprodsum's scale-8 product under 2²¹): with
+#    fewer than 2⁴¹ ≈ 2.2·10¹² accepted rows per group every component
+#    sum stays under 2⁶³ (~10¹² rows per group at the 100 TB target).
 # Equivalence is pinned by tests/test_queries_dsum_fast.py (property
-# test over the invariant class incl. NULLs/negatives/extremes) and by
-# the full-registry oracle sweeps at sf0.001/0.01/0.1.
+# test over the invariant class incl. NULLs/negatives/extremes and the
+# [9·10⁸, 10¹⁴) fallback band) and by the full-registry oracle sweeps
+# at sf0.001/0.01/0.1.
 
 _SPLIT_MASK = (1 << 21) - 1
 
 
 def _scaled4(c) -> F.Column:
     """Unscaled BIGINT of CAST(x AS DECIMAL(18,4)) under the dsum
-    invariant: rint(x·10⁴); NULL for NULL/NaN/±Inf/|x| ≥ 9·10⁸."""
+    invariant: rint(x·10⁴) for |x| < 9·10⁸, the decimal cast itself
+    beyond; NULL for NULL/NaN/±Inf."""
     col = F.col(c) if isinstance(c, str) else c
     return F.when(
-        F.abs(col) < F.lit(9.0e8), F.rint(col * F.lit(1.0e4))
-    ).cast("bigint")
+        F.abs(col) < F.lit(9.0e8), F.rint(col * F.lit(1.0e4)).cast("bigint")
+    ).otherwise((col.cast("decimal(18,4)") * F.lit(10**4)).cast("bigint"))
 
 
 def _split_sum(s: F.Column) -> F.Column:
@@ -229,8 +238,10 @@ def _split4_value(prefix: str) -> F.Column:
 def dprodsum(price, frac_unscaled: F.Column, alias: str) -> F.Column:
     """Exact double sum of price·frac where frac arrives as its scale-4
     unscaled long (e.g. 10⁴ − scaled4(discount) for price·(1−disc)):
-    per-row product is a scale-8 long (|price| ≤ 10⁸ and |frac| ≤ 10⁵
-    keep it < 2⁶³), split-summed exactly, then HALF_UP-rounded from
+    per-row product is a scale-8 long (|price| < 9·10⁹ and |frac| ≤ 10⁵
+    keep it < 2⁶³; past that the long multiply overflows, which raises
+    ARITHMETIC_OVERFLOW under ANSI, the session default), split-summed
+    exactly, then HALF_UP-rounded from
     scale 8 to scale 4 in pure DECIMAL(38,0) integer arithmetic —
     bit-identical to CAST(SUM(dec·dec) AS DECIMAL(18,4)) (q76 lesson:
     pmod-based half-away rounding, pinned by the dsum property test)."""

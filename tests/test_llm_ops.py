@@ -195,6 +195,156 @@ def test_lsh_topk_recall_guard(spark, sf_dir):
         assert not [x for x in w if "ivf_topk" in str(x.message)]
 
 
+def _old_hyperplane_bucket(vec, dim, n_planes, seed=42):
+    """The per-`F.lit` bucket builder hyperplane_bucket replaced, kept
+    as the reference its buckets are diffed against."""
+    bucket = F.lit(0).cast("long")
+    for i, plane in enumerate(similarity._planes(dim, n_planes, seed)):
+        d = F.aggregate(
+            F.zip_with(
+                vec,
+                F.array(*[F.lit(p) for p in plane]),
+                lambda x, y: x.cast("double") * y,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bucket = bucket + F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    return bucket
+
+
+def _bucket_rows(dim, n=200, seed=7):
+    import random
+
+    rng = random.Random(seed)
+    rows = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n)]
+    rows += [
+        [0.0] * dim,  # zero vector: every dot product is 0.0 >= 0
+        None,  # NULL vector
+        [None] + [1.0] * (dim - 1),  # NULL element
+        [1.0] * (dim - 1),  # short: zip_with pads the plane side
+        [-1.0] * (dim + 1),  # long: zip_with pads the vector side
+    ]
+    return [(i, v) for i, v in enumerate(rows)]
+
+
+@pytest.mark.parametrize("dim", [3, 64])
+def test_hyperplane_bucket_matches_per_literal_builder(spark, dim, monkeypatch):
+    df = spark.createDataFrame(_bucket_rows(dim), "id int, v array<float>")
+
+    def diff(n_planes):
+        pair = df.select(
+            "id",
+            _old_hyperplane_bucket(F.col("v"), dim, n_planes).alias("old"),
+            similarity.hyperplane_bucket(F.col("v"), dim, n_planes).alias("new"),
+        ).collect()
+        assert len(pair) == len(_bucket_rows(dim))
+        return [r for r in pair if r["old"] != r["new"] or r["new"] is None]
+
+    for n_planes in (1, 6, 16):
+        assert diff(n_planes) == [], (dim, n_planes)
+    # coefficients whose repr is exponent form or a negative zero must
+    # reach the SQL literal as the same doubles
+    planes = similarity._planes(dim, 6, 42)
+    planes[0][0], planes[0][1] = 9.5e-05, -0.0
+    planes[1][0] = -1.25e-07
+    monkeypatch.setattr(similarity, "_planes", lambda d, n, s: planes)
+    assert repr(planes[0][0]) == "9.5e-05"
+    assert diff(6) == []
+
+
+def test_hyperplane_bucket_compose_cost_is_flat(spark):
+    """The plane matrix is one SQL literal: the py4j round trips of a
+    build do not grow with dim × n_planes (one per coefficient before)."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = type(client).send_command.__get__(client)
+    builder = threading.get_ident()
+    calls = [0]
+
+    def counted(*args, **kwargs):
+        # py4j's finalizer thread sends deletes of objects freed earlier
+        # through the same client: count the building thread's calls only
+        if threading.get_ident() == builder:
+            calls[0] += 1
+        return send(*args, **kwargs)
+
+    def cost(dim, n_planes):
+        gc.collect()
+        gc.disable()
+        calls[0] = 0
+        client.send_command = counted
+        try:
+            similarity.hyperplane_bucket(F.col("v"), dim, n_planes)
+        finally:
+            client.__dict__.pop("send_command", None)
+            gc.enable()
+        return calls[0]
+
+    small, large = cost(8, 2), cost(256, 16)
+    assert abs(large - small) < 20, (small, large)
+    assert small < 400 and large < 400, (small, large)
+
+
+def test_lsh_topk_q28_single_exchange(spark, sf_dir):
+    """The per-pair dedup exchange is gone: the only shuffle left in
+    q28 is the rank window's (the query side is broadcast)."""
+    from hadron_spark.plans import shuffle_count
+    from hadron_spark.queries import QUERIES
+
+    df = QUERIES["q28_lsh_topk"](spark, sf_dir)
+    assert shuffle_count(df) == 1
+    assert "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lsh_topk_duplicate_corpus_id_keeps_each_row(spark):
+    """The documented unique-id precondition, broken on purpose: both
+    rows of a duplicated corpus id are kept and ranked, none dropped.
+    n_planes=1 with one flip probe compares every corpus row."""
+    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (7, [0.5, 0.5]), (7, [-0.5, 0.5]),
+            (8, [0.0, -1.0])]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = corpus.filter(F.col("vec_id") == 0)
+    got = similarity.lsh_topk(corpus, q, k=10, n_planes=1, multiprobe=1).collect()
+    assert sorted(r["neighbor_id"] for r in got) == [1, 7, 7, 8]
+    assert sorted(r["rank"] for r in got) == [1, 2, 3, 4]
+
+
+def test_hamming_near_pairs_matches_bruteforce(spark):
+    import random
+
+    rng = random.Random(3)
+    hashes = [rng.getrandbits(64) for _ in range(40)]
+    for base in hashes[:20]:  # near copies at 1..4 flipped bits
+        h = base
+        for b in rng.sample(range(64), rng.randint(1, 4)):
+            h ^= 1 << b
+        hashes.append(h)
+    signed = [h - (1 << 64) if h >= 1 << 63 else h for h in hashes]
+    df = spark.createDataFrame(list(enumerate(signed)), "doc_id long, hash long")
+    want = {
+        (i, j, bin(hashes[i] ^ hashes[j]).count("1"))
+        for i in range(len(hashes))
+        for j in range(i + 1, len(hashes))
+        if bin(hashes[i] ^ hashes[j]).count("1") <= 3
+    }
+    assert want  # the fixture has near pairs to find
+    for guard in (500, None):
+        got = {
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in dedup.hamming_near_pairs(df, max_bucket_size=guard).collect()
+        }
+        assert got == want
+    # six identical hashes fill every chunk bucket past a guard of 5
+    same = spark.createDataFrame([(i, 12345) for i in range(6)], "doc_id long, hash long")
+    assert dedup.hamming_near_pairs(same, max_bucket_size=5).collect() == []
+    assert len(dedup.hamming_near_pairs(same, max_bucket_size=6).collect()) == 15
+
+
 def _tiny_png(w, h):
     import struct, zlib
 
