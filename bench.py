@@ -6,6 +6,12 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is timed end-to-end (plan + execute + collect-to-count) —
 a foreachPartition-style count() action so results are materialized
 but never shipped to the driver.
+
+    python bench.py                       # HEADLINE set, verdicts, A/B
+    python bench.py --only q01_x q27_y    # {"queries": {...}} only
+    python bench.py --adjudicate q01_x    # A/B vs the sealed commit
+
+Every mode times through the one loop, `time_cells`.
 """
 
 from __future__ import annotations
@@ -15,8 +21,6 @@ import os
 import re
 import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # headline set: aggregation core, joins, windows, custom streaming
 # reducer, and the LLM ops — the queries whose plans matter at scale.
@@ -123,79 +127,33 @@ def release_pins(spark) -> None:
     q245 9.9 s after q208/q209's pins vs 5.8 s clean — a 1.7x
     phantom regression on an untouched query).  Runs only in the
     UNTIMED gap between cells: every timed iteration still computes
-    from parquet; this removes cross-query state, it never adds any."""
-    try:
-        # py4j wraps the java.util.Map as a Python MutableMapping, so
-        # .values() is a plain Python ValuesView — iterate it directly
-        # (calling .iterator() on it raises and would no-op the hygiene)
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(True)
-    except Exception:
-        pass  # advisory hygiene — never fail the bench over it
+    from parquet; this removes cross-query state, it never adds any.
+
+    Lives here, not in hadron_spark, because the A/B side imports a
+    sealed hadron_spark that may predate any helper added there.  No
+    try/except: a release that silently no-ops (it once did, on a
+    `.iterator()` call the py4j map does not have) is a bench that
+    measures the previous cell's pins."""
+    # py4j wraps the java.util.Map as a Python MutableMapping, so
+    # .values() is a plain Python ValuesView — iterate it directly
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
 
 
-def main() -> None:
+def main(only: list[str] | None = None) -> None:
+    """The HEADLINE bench; with `only`, time just those cells and print
+    {"queries": {...}} — no verdicts, no adjudication."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from hadron_spark import get_spark
-    from hadron_spark.queries import QUERIES
 
     spark = get_spark("hadron_spark_bench")
-
-    # JMH-style warm-up: one full UNTIMED iteration at the measured SF
-    # (iteration 0 discarded), so whole-stage-codegen compilation and
-    # JVM JIT are not billed to the timed pass — the reported numbers
-    # measure steady-state throughput, which is what a long-lived
-    # cluster session sees. Warming at the same SF matters: AQE picks
-    # different physical strategies (broadcast vs SMJ) at different
-    # data sizes, so smaller-SF warm-up would compile the wrong plans.
-    # A cell that raises stops the bench here, named, instead of
-    # failing later inside its timed loop.
-    for name in HEADLINE:
-        try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:
-            raise RuntimeError(f"bench warm-up failed on {name}") from exc
-    spark.catalog.clearCache()  # drop warm-up persists; keep JIT/codegen
-    release_pins(spark)  # drop warm-up pins too
-    # settle before the timed pass so warm-up garbage isn't collected
-    # in the middle of the first timed query
-    spark._jvm.System.gc()
-    time.sleep(1.0)
-
-    # two timed iterations per query, report the min (JMH practice):
-    # single-shot local-mode timings carry 2-3x spikes when a GC
-    # pause or recompile lands inside one timed window — the min of
-    # two is a far lower-variance estimator of steady-state cost and
-    # is what a capacity plan would use.
-    #
-    # GC placement matters both ways: a full GC unloads whole-stage-
-    # codegen generated classes (classloaders only weakly reachable),
-    # so a GC between the two iterations forces a Janino recompile
-    # inside iteration 2's window (measured +0.35 s on the 2-join
-    # decimal-agg plan); NO GC at all lets earlier queries' garbage
-    # (broadcast relations, Arrow buffers) trigger organic full GCs
-    # inside BOTH iterations of whichever query is running when the
-    # heap fills (measured +2 s spikes). So: untimed GC BETWEEN
-    # queries — iteration 1 eats the recompile (discarded by the
-    # min), iteration 2 runs with compiled classes on a clean heap.
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = QUERIES[name]
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        release_pins(spark)  # untimed: clear pins before the next cell
-        spark._jvm.System.gc()
-
+    timings = time_cells(spark, only or HEADLINE, sf_dir)
+    if only:
+        spark.stop()
+        print(json.dumps({"queries": timings}))
+        return
     total = round(sum(timings.values()), 3)
     # Field ORDER is load-bearing (optimization r08, VERDICT r07 #2):
     # the round driver records the END of stdout, so a too-long line
@@ -237,6 +195,55 @@ def main() -> None:
         out["regressions_file"] = os.path.basename(side)
     out["queries"] = timings
     print(json.dumps(out))
+
+
+def time_cells(spark, names: list[str], sf_dir: str) -> dict[str, float]:
+    """{name: seconds} for registry queries `names` at `sf_dir` — the
+    one timing loop behind every bench mode.
+
+    Warm-up: one full UNTIMED pass over `names` at the measured SF
+    (JMH iteration 0), so codegen compilation and JIT are not billed
+    to the timed pass; the SF must match because AQE picks different
+    strategies (broadcast vs SMJ) at different sizes.  A cell that
+    raises stops the run here, named.
+
+    Timed: per cell, the min of two `noop` writes (single shots carry
+    2-3x GC/recompile spikes), then an untimed release + full GC.  GC
+    sits BETWEEN cells, never between the two iterations: a full GC
+    unloads generated classes, forcing a Janino recompile into
+    iteration 2 (measured +0.35 s), while no GC at all lets earlier
+    cells' garbage land organic full GCs in both iterations (+2 s).
+    Iteration 1 eats the recompile, iteration 2 runs on a clean heap."""
+    from hadron_spark.queries import QUERIES
+
+    def run(name: str) -> None:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    for name in names:
+        try:
+            run(name)
+        except Exception as exc:
+            raise RuntimeError(f"bench warm-up failed on {name}") from exc
+    spark.catalog.clearCache()  # drop warm-up persists; keep JIT/codegen
+    release_pins(spark)  # drop warm-up pins too
+    # settle so warm-up garbage isn't collected inside the first cell
+    spark._jvm.System.gc()
+    time.sleep(1.0)
+
+    timings: dict[str, float] = {}
+    for name in names:
+        best = None
+        for _ in range(2):
+            t0 = time.perf_counter()
+            run(name)
+            dt = time.perf_counter() - t0
+            best = dt if best is None else min(best, dt)
+        timings[name] = round(best, 3)
+        release_pins(spark)  # untimed: clear pins before the next cell
+        spark._jvm.System.gc()
+    return timings
 
 
 def regression_verdicts(
@@ -325,65 +332,31 @@ def regression_verdicts(
     }
 
 
-# one timing side of the A/B: runs in a SUBPROCESS with cwd = the
-# side's repo root, so `import hadron_spark` resolves to that side's
-# code; mirrors bench's discipline (untimed warm-up, min of 2)
-_AB_RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, os.getcwd())
-sf_dir = sys.argv[1]; names = sys.argv[2:]
-from hadron_spark import get_spark
-from hadron_spark.queries import QUERIES
-spark = get_spark("ab_adjudicate")
-def _release_pins():
-    try:
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(True)
-    except Exception:
-        pass
-out = {}
-for n in names:
-    fn = QUERIES.get(n)
-    if fn is None:
-        out[n] = None
-        continue
-    try:
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        _release_pins()
-        spark._jvm.System.gc()
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out[n] = round(best, 3)
-    except Exception:
-        out[n] = None
-    _release_pins()
-    spark._jvm.System.gc()
-spark.stop()
-print("ABJSON:" + json.dumps(out))
-"""
-
-
 def _ab_side_run(side_dir: str, sf_dir: str, names: list[str]) -> dict:
+    """One timing side of the A/B: THIS tree's `bench.py --only` in a
+    subprocess (fresh JVM) that imports `side_dir`'s hadron_spark.
+    `-P` keeps this script's own directory off `sys.path`, so the
+    side's root, first on PYTHONPATH, is what `import hadron_spark`
+    resolves to — a sealed tree's own bench.py may lack `--only`."""
     import subprocess
 
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
+    env["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [side_dir, env.get("PYTHONPATH")])
+    )
     p = subprocess.run(
-        [sys.executable, "-c", _AB_RUNNER, sf_dir] + list(names),
+        [sys.executable, "-P", os.path.abspath(__file__), "--only", *names],
         cwd=side_dir,
-        env=dict(os.environ),
+        env=env,
         capture_output=True,
         text=True,
         timeout=1800,
     )
-    for line in p.stdout.splitlines():
-        if line.startswith("ABJSON:"):
-            return json.loads(line[len("ABJSON:"):])
-    raise RuntimeError(
-        f"A/B side run failed in {side_dir}: {p.stderr[-2000:]}"
-    )
+    if p.returncode != 0:
+        raise RuntimeError(
+            f"A/B side run failed in {side_dir}: {p.stderr[-2000:]}"
+        )
+    return json.loads(p.stdout.splitlines()[-1])["queries"]
 
 
 def adjudicate(
@@ -393,16 +366,17 @@ def adjudicate(
     code_threshold: float = 1.3,
 ) -> dict:
     """Automatic box-vs-code adjudication of flagged bench cells
-    (VERDICT r6 #8): the manual BASELINE.md worktree ritual, wired in.
+    (VERDICT r6 #8): the manual BASELINE.md A/B ritual, wired in.
 
     The box drifts up to ~1.4× intra-day, so a cell that regressed
     against a PRIOR-DAY recording proves nothing about the code.  The
-    discriminating experiment is like-for-like and INTERLEAVED: check
-    out the previous sealed commit (the one that added the newest
-    BENCH_r*.json — the exact code those cells were recorded on) into
-    a detached git worktree, then alternate old-code / new-code
-    subprocess timings of the flagged queries on TODAY's box,
-    old→new→old→new.  Interleaving cancels slow machine drift; min
+    discriminating experiment is like-for-like and INTERLEAVED: extract
+    the previous sealed commit (the one that added the newest
+    BENCH_r*.json — the exact code those cells were recorded on) with
+    `git archive` into a temp dir (a worktree would register itself
+    in `.git`, and a killed run would leave it there), then alternate
+    old-code / new-code subprocess timings of the flagged queries on
+    TODAY's box, old→new→old→new.  Interleaving cancels slow machine drift; min
     over a side's runs drops GC/compile spikes.  ratio = new_min /
     old_min; > `code_threshold` (1.3, inside the drift band every
     manual adjudication used) stamps `adjudicated: "code"` — a real
@@ -436,43 +410,31 @@ def adjudicate(
         return {}
     root = tempfile.mkdtemp(prefix="hadron_ab_")
     wt = os.path.join(root, "wt")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", wt, commit],
-        cwd=here,
-        check=True,
-        capture_output=True,
-    )
     try:
+        os.mkdir(wt)
+        tar = os.path.join(root, "sealed.tar")
+        subprocess.run(["git", "archive", "-o", tar, commit], cwd=here,
+                       check=True, capture_output=True)
+        subprocess.run(["tar", "-xf", tar, "-C", wt], check=True,
+                       capture_output=True)
         old_best: dict[str, float] = {}
         new_best: dict[str, float] = {}
         for _ in range(pairs):
             for side_dir, best in ((wt, old_best), (here, new_best)):
-                got = _ab_side_run(side_dir, sf_dir, names)
-                for q, v in got.items():
-                    if v is not None:
-                        best[q] = min(best.get(q, float("inf")), v)
+                for q, v in _ab_side_run(side_dir, sf_dir, names).items():
+                    best[q] = min(best.get(q, float("inf")), v)
         out = {}
         for q in names:
-            if q in old_best and q in new_best and old_best[q] > 0:
-                r = new_best[q] / old_best[q]
-                out[q] = {
-                    "ab_old": old_best[q],
-                    "ab_new": new_best[q],
-                    "ab_ratio": round(r, 3),
-                    "adjudicated": (
-                        "code" if r > code_threshold else "box"
-                    ),
-                    "ab_commit": commit[:12],
-                }
-            else:
-                out[q] = {"adjudicated": "error", "ab_commit": commit[:12]}
+            r = new_best[q] / old_best[q]
+            out[q] = {
+                "ab_old": old_best[q],
+                "ab_new": new_best[q],
+                "ab_ratio": round(r, 3),
+                "adjudicated": "code" if r > code_threshold else "box",
+                "ab_commit": commit[:12],
+            }
         return out
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=here,
-            capture_output=True,
-        )
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -482,5 +444,7 @@ if __name__ == "__main__":
             "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
         )
         print(json.dumps(adjudicate(sys.argv[2:], _sf_dir)))
+    elif len(sys.argv) > 2 and sys.argv[1] == "--only":
+        main(sys.argv[2:])
     else:
         main()

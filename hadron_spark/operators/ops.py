@@ -607,7 +607,13 @@ def pin(df: DataFrame) -> DataFrame:
         reliable `checkpoint` to that HDFS/object-store path for
         EVERY pin in the library — survives executor loss at the
         cost of a distributed-FS write + read. The MLlib convention
-        (ALS, GraphFrames checkpoint only when a dir is set)."""
+        (ALS, GraphFrames checkpoint only when a dir is set). A
+        dropped reliable pin's `rdd-N` dir is deleted by the
+        ContextCleaner once the frame is garbage (`get_spark` sets
+        `spark.cleaner.referenceTracking.cleanCheckpoints`); a pin
+        still referenced keeps its files. The cleaner resolves
+        `rdd-N` under the dir set at cleanup time, so a pin dropped
+        after the dir is unset or changed keeps its files."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=True)
     return df.checkpoint(eager=True)

@@ -55,6 +55,10 @@ def get_spark(
         # and let taps/queries normalize to micros timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # delete a reliable pin's rdd-N checkpoint dir once its frame is
+        # garbage (ops.pin); read from the context's conf when the
+        # checkpoint is written, so it must be set before the context
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from hadron_spark.llm import dedup, multimodal, similarity, textstats
 from hadron_spark.sources.taps import tap
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_exact_dedup_drops_copies(spark):
@@ -834,7 +838,7 @@ def test_lsh_recall_floor_on_clustered_fixture(spark):
     could. IVF stays the documented default tier."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from tools.ann_recall import clustered_embeddings, recall_at_k
 
     cl = clustered_embeddings(spark, n_clusters=12, per_cluster=40, dim=16)

@@ -3,11 +3,15 @@ skew-handling utilities."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from hadron_spark.operators.mapreduce import counter
 from hadron_spark.operators.ops import salted_agg, salted_join
 from hadron_spark.sources.taps import Tap, tap
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_counter_observes_metrics(spark, sf_dir):
@@ -96,7 +100,7 @@ def test_bench_regression_verdicts(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     prior = {"qa": 1.0, "qb": 2.0, "qc": 0.5, "qd": 4.0}
@@ -126,7 +130,7 @@ def test_bench_regression_verdicts_tail_recovery(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     tail = (
@@ -156,7 +160,7 @@ def test_bench_tail_recovery_anchors_last_queries_block(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import bench
 
     tail = (
@@ -172,3 +176,49 @@ def test_bench_tail_recovery_anchors_last_queries_block(tmp_path, monkeypatch):
     # priors come from the SECOND (newest) line: ratios are all 1.0
     assert v["median_ratio"] == 1.0
     assert v["regressions"] == {}
+
+
+def test_bench_time_cells_times_and_releases_pins(spark, sf_dir):
+    """bench's one timing loop: q27, which pins its hash table, times
+    to a positive float and leaves no persistent RDD behind."""
+    import sys
+
+    sys.path.insert(0, REPO_ROOT)
+    import bench
+
+    got = bench.time_cells(spark, ["q27_simhash_pairs"], sf_dir)
+    assert list(got) == ["q27_simhash_pairs"]
+    assert isinstance(got["q27_simhash_pairs"], float)
+    assert got["q27_simhash_pairs"] > 0
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+
+
+def test_bench_ab_side_run_times_the_side_tree(tmp_path):
+    """An A/B side runs this tree's `bench.py --only` against the
+    SIDE's hadron_spark: a fake side whose registry holds a query this
+    tree lacks gets that query timed (no JVM — its session is a mock)."""
+    import sys
+
+    sys.path.insert(0, REPO_ROOT)
+    import bench
+    from hadron_spark.queries import QUERIES
+
+    assert "q_side_only" not in QUERIES
+    pkg = tmp_path / "side" / "hadron_spark"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text(
+        "from unittest.mock import MagicMock\n\n\n"
+        "def get_spark(app_name):\n"
+        "    return MagicMock()\n"
+    )
+    (pkg / "queries.py").write_text(
+        "import time\n"
+        "from unittest.mock import MagicMock\n\n\n"
+        "def q_side_only(spark, sf_dir):\n"
+        "    time.sleep(0.01)\n"
+        "    return MagicMock()\n\n\n"
+        "QUERIES = {'q_side_only': q_side_only}\n"
+    )
+    got = bench._ab_side_run(str(pkg.parent), str(tmp_path), ["q_side_only"])
+    assert list(got) == ["q_side_only"]
+    assert got["q_side_only"] >= 0.01

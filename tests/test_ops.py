@@ -612,7 +612,9 @@ def test_pin_reliability_follows_checkpoint_dir(spark, tmp_path):
     """Every pin in the library — ops.pin itself and the per-round
     pins inside graph.connected_components — writes a reliable
     checkpoint under the SparkContext's checkpoint dir when one is
-    set, and nothing there once it is unset (local checkpoints)."""
+    set, and nothing there once it is unset (local checkpoints).  The
+    frames stay referenced while their dirs are listed: the cleaner
+    deletes a dropped pin's dir."""
     from hadron_spark.operators.graph import connected_components
     from hadron_spark.operators.ops import pin
 
@@ -620,30 +622,61 @@ def test_pin_reliability_follows_checkpoint_dir(spark, tmp_path):
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
 
     def written():
-        return sorted(p.name for p in ckpt.rglob("rdd-*"))
+        return {p.name for p in ckpt.rglob("rdd-*")}
 
-    def pinned_rows():
-        return sorted(tuple(r) for r in pin(spark.range(10)).collect())
-
-    def components():
-        return sorted(tuple(r) for r in connected_components(edges).collect())
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
 
     spark.sparkContext.setCheckpointDir(str(ckpt))
     try:
-        assert pinned_rows() == [(i,) for i in range(10)]
+        pinned = pin(spark.range(10))
+        assert rows(pinned) == [(i,) for i in range(10)]
         after_pin = written()
         assert after_pin
-        comps = components()
-        assert comps == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+        comps = connected_components(edges)
+        assert rows(comps) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
         after_cc = written()
-        assert len(after_cc) > len(after_pin)
+        assert after_pin < after_cc
     finally:
         # the session-scoped SparkContext is shared by every test
         spark.sparkContext._jsc.setCheckpointDir(None)
     assert spark.sparkContext.getCheckpointDir() is None
-    assert pinned_rows() == [(i,) for i in range(10)]
-    assert components() == comps
-    assert written() == after_cc
+    assert rows(pin(spark.range(10))) == rows(pinned)
+    assert rows(connected_components(edges)) == rows(comps)
+    assert written() <= after_cc
+
+
+def test_dropped_reliable_pins_are_deleted(spark, tmp_path):
+    """Reliable pins do not leak files: once a pinned frame is garbage
+    on both sides of py4j, the ContextCleaner deletes its rdd-N dir,
+    while a pin still referenced keeps its dir and reads back."""
+    import gc
+    import time
+
+    from hadron_spark.operators.ops import pin
+
+    ckpt = tmp_path / "ckpt"
+
+    def written():
+        return {p.name for p in ckpt.rglob("rdd-*")}
+
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    try:
+        kept = pin(spark.range(5))
+        kept_dir = written()
+        assert len(kept_dir) == 1
+        dropped = [pin(spark.range(n)) for n in (10, 20, 30)]
+        assert len(written()) == 4
+        del dropped
+        deadline = time.monotonic() + 30
+        while written() != kept_dir and time.monotonic() < deadline:
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+        assert written() == kept_dir
+        assert sorted(r.id for r in kept.collect()) == list(range(5))
+    finally:
+        spark.sparkContext._jsc.setCheckpointDir(None)
 
 
 def test_grouping_sets_from_cells_matches_native(spark):
