@@ -144,7 +144,6 @@ def main(only: list[str] | None = None) -> None:
     """The HEADLINE bench; with `only`, time just those cells and print
     {"queries": {...}} — no verdicts, no adjudication."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from hadron_spark import get_spark
 
@@ -167,7 +166,7 @@ def main(only: list[str] | None = None) -> None:
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": run_scale()[0],
     }
     verdicts = regression_verdicts(timings)
     regs = verdicts.pop("regressions", {})
@@ -246,14 +245,27 @@ def time_cells(spark, names: list[str], sf_dir: str) -> dict[str, float]:
     return timings
 
 
+def run_scale() -> tuple:
+    """(sf, cpus) of this run — the two scale fields the driver records
+    at the top of every BENCH_r*.json."""
+    from hadron_spark.session import _default_parallelism
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    return sf, _default_parallelism()
+
+
 def regression_verdicts(
     timings: dict[str, float], threshold: float = 1.5
 ) -> dict:
     """Machine like-for-like gate (VERDICT r4 #6): compare this run's
-    common-subset cells against the newest recorded BENCH_r*.json,
-    NORMALIZE by the median per-query ratio — the median absorbs the
-    VM's documented 1.1–1.25× whole-machine jitter, so what remains
-    is per-query drift — and flag any cell whose normalized ratio
+    common-subset cells against the newest recorded BENCH_r*.json of
+    the SAME scale (top-level `sf` and `cpus` equal to `run_scale()`;
+    with no such prior the result is `{}`), NORMALIZE by the median
+    per-query ratio — the median absorbs the VM's documented
+    1.1–1.25× whole-machine jitter, so what remains is per-query
+    drift — and flag any cell whose normalized ratio
     exceeds `threshold` (q100's r4 2.86× would have been machine-
     flagged).  Returns extra JSON fields: `prior_bench`,
     `median_ratio`, and `regressions` {query: {prior, sec, ratio,
@@ -269,12 +281,15 @@ def regression_verdicts(
         glob.glob(os.path.join(here, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
     )
-    if not benches:
-        return {}
-    prior_path = benches[-1]
-    try:
+    scale = run_scale()
+    for prior_path in reversed(benches):
         with open(prior_path) as f:
             raw = json.load(f)
+        if (raw.get("sf"), raw.get("cpus")) == scale:
+            break
+    else:
+        return {}
+    try:
         src = raw.get("parsed") or raw
         if "queries" not in src and isinstance(raw.get("tail"), str):
             # driver-recorded BENCH_r*.json (r6+) wraps the bench's

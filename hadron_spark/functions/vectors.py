@@ -1,15 +1,9 @@
 """Vector functions over array<float|double> columns — JVM-side
-expressions (zip_with + aggregate) by default: the dot product of two
-64-dim arrays stays inside whole-stage codegen. The one deliberate
-exception is `cosine_matrix_pandas`, the Arrow-vectorized scalar
-pandas_udf escape hatch for large dim × |queries| matmuls (see its
-docstring for the trade-off).
+expressions (zip_with + aggregate): the dot product of two 64-dim
+arrays stays inside whole-stage codegen.
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -59,50 +53,6 @@ def euclidean_distance(a: Column, b: Column) -> Column:
             lambda acc, x: acc + x,
         )
     )
-
-
-def cosine_matrix_pandas(query_matrix):
-    """Arrow-vectorized cosine scorer: a SCALAR pandas_udf (the one
-    UDF tier the expression library otherwise never needs) that
-    scores each corpus vector against a closure-captured query
-    matrix with one numpy matmul per Arrow batch, returning the
-    per-row score array.
-
-    When to prefer this over the `cosine_similarity` expression:
-    higher-order array functions execute interpreted per element, so
-    at large dim × |queries| the per-row expression tree dominates;
-    the matmul path amortizes to BLAS. The trade: scores leave the
-    JVM (Arrow copy) and numpy's pairwise summation is NOT
-    bit-identical to sequential fold — use for ranking (top-k is
-    stable), not for oracle-hashed values.
-
-    query_matrix: list of (query_id, vector). Returns a pandas_udf
-    mapping an array column -> array<struct<query_id,score>> rows.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    qids = [int(q) for q, _ in query_matrix]
-    qm = np.asarray([v for _, v in query_matrix], dtype=np.float64)
-    qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-30)
-
-    @pandas_udf("array<struct<query_id: long, score: double>>")
-    def score(batch: pd.Series) -> pd.Series:
-        m = np.asarray(batch.tolist(), dtype=np.float64)
-        mn = m / np.maximum(
-            np.linalg.norm(m, axis=1, keepdims=True), 1e-30
-        )
-        sims = mn @ qn.T  # (rows, queries)
-        return pd.Series(
-            [
-                [
-                    {"query_id": qids[j], "score": float(row[j])}
-                    for j in range(len(qids))
-                ]
-                for row in sims
-            ]
-        )
-
-    return score
 
 
 # ---------------------------------------------------------------------------

@@ -89,7 +89,6 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    backend: str = "expr",
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
 
@@ -97,44 +96,7 @@ def brute_force_topk(
     construction) → every corpus partition scores its rows against
     all queries locally (no shuffle of the corpus) → one shuffle of
     k·|queries| candidate rows for the window. Self-matches excluded.
-    Rank ties broken by neighbor id for determinism.
-
-    backend="expr" (default) scores with the codegen'd JVM
-    expression; backend="pandas" routes through the Arrow-vectorized
-    numpy matmul scorer (functions.vectors.cosine_matrix_pandas) —
-    faster at large dim × |queries|, but its pairwise FP summation is
-    not bit-identical to the fold, so use it for ranking, not for
-    oracle-hashed score values."""
-    if backend == "pandas":
-        from hadron_spark.functions.vectors import cosine_matrix_pandas
-
-        qrows = [
-            (r["query_id"], list(map(float, r["qvec"])))
-            for r in queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"),
-            ).collect()
-        ]
-        scorer = cosine_matrix_pandas(qrows)
-        scored = (
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.explode(scorer(F.col(vec_col).cast("array<double>"))).alias("s"),
-            )
-            .select(
-                F.col("s.query_id").alias("query_id"),
-                "neighbor_id",
-                F.col("s.score").alias("cosine"),
-            )
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+    Rank ties broken by neighbor id for determinism."""
     q = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")

@@ -154,4 +154,10 @@ def compact(
     df.coalesce(n_files).write.format(fmt).mode("overwrite").save(tmp)
     delete(spark, path)
     mv(spark, tmp, path)
-    return len([f for f in ls(spark, path) if f.path.endswith(tuple([".parquet", ".orc", ".csv", ".json"])) or not f.is_dir])
+    # data files only: `_SUCCESS` and the local FS's `.crc` files are
+    # the names Spark's own reader skips
+    return sum(
+        1
+        for f in ls(spark, path)
+        if not f.path.rpartition("/")[2].startswith(("_", "."))
+    )

@@ -1,7 +1,6 @@
 """Streaming operators: file-source taps, watermarked windows,
 session windows, memory-sink test drivers, and the incremental
-stateful tier (foreachBatch + a parquet state store with the
-exactly-once HWM/swap-heal trio).
+stateful tier (foreachBatch + a parquet state store).
 
 State-size contract (VERDICT r6 #9) — what each `incremental_*` op
 keeps on disk and what it REWRITES per micro-batch.  "swap" = the
@@ -25,6 +24,11 @@ versioned-base compaction folding old dirs periodically.
 | incremental_holt_winters   | per-key (l, b, ring) + warm-up buffer | O(keys·period) | swap      |
 | incremental_near_dup       | banded MinHash signatures | O(docs·bands)       | append          |
 | streaming_substring_dedup  | window fingerprints       | O(corpus windows)   | append          |
+
+Every swap-class op is one merge `(batch, prev) -> state` handed to
+`_swap_state`, which owns the exactly-once protocol for all ten (see
+its docstring); the two append-class stores keep their own
+`hwm_marker` dirs, which also carry their layout.
 
 Every swap-class op is safe at any stream LENGTH (state never grows
 with volume, only with the listed dimensions); the two corpus-sized
@@ -279,8 +283,21 @@ def foreach_batch_upsert(
             merged = batch_df
         _commit_swap(spark, merged, target_path, batch_id)
 
-    writer = stream.writeStream.foreachBatch(apply).outputMode("update").trigger(
-        availableNow=True
+    return _start(stream, apply, checkpoint, output_mode="update")
+
+
+def _start(
+    stream: DataFrame,
+    apply,
+    checkpoint: str | None,
+    output_mode: str = "append",
+):
+    """Drive `apply(batch_df, batch_id)` over everything `stream` has
+    now (availableNow trigger); returns the started StreamingQuery."""
+    writer = (
+        stream.writeStream.foreachBatch(apply)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -339,13 +356,20 @@ def _recover_swap(spark, target_path: str) -> None:
             fs.delete(spark, p)
 
 
-def _commit_swap(spark, merged: DataFrame, target_path: str, batch_id) -> None:
+def _commit_swap(
+    spark, merged: DataFrame, target_path: str, batch_id, mark: bool = False
+) -> None:
     """Atomically-enough replace `target_path` with `merged`
-    (tmp-then-rename; `_recover_swap` heals every crash window)."""
+    (tmp-then-rename; `_recover_swap` heals every crash window).
+    `mark` also writes the empty `_hwm_<batch_id>` dir of a
+    `_swap_state` state into the tmp dir before the first rename, so
+    every recovery case promotes the mark together with its data."""
     from hadron_spark.sources import fs
 
     tmp = target_path + f"._tmp_{batch_id}"
     merged.write.mode("overwrite").parquet(tmp)
+    if mark:
+        fs.mkdir(spark, f"{tmp}/{_HWM}{int(batch_id)}")
     old = target_path + f"._old_{batch_id}"
     if fs.exists(spark, target_path):
         fs.mv(spark, target_path, old)
@@ -354,18 +378,80 @@ def _commit_swap(spark, merged: DataFrame, target_path: str, batch_id) -> None:
         fs.delete(spark, old)
 
 
-GRAM_MARK = -2  # (i, j) = (-2, -2) row carries the batch high-water mark
+# Spark's file index skips `_`-prefixed names only when they hold no
+# `=` (those are partition dirs), hence `_hwm_<id>`, never `_hwm=<id>`
+_HWM = "_hwm_"
+
+
+def _swap_hwm(spark, state_path: str) -> int:
+    """The batch high-water mark of a committed swap state: one
+    listing of its dir, no Spark job."""
+    from hadron_spark.sources import fs
+
+    marks = [
+        int(name[len(_HWM):])
+        for name in (
+            e.path.rstrip("/").rpartition("/")[2]
+            for e in fs.ls(spark, state_path)
+        )
+        if name.startswith(_HWM)
+    ]
+    if not marks:
+        raise ValueError(
+            f"swap state {state_path} has no {_HWM}<batch_id> entry: it "
+            "was written by a version that kept the high-water mark in a "
+            "data row, which would now be merged as data — rebuild it "
+            "from a fresh checkpoint"
+        )
+    return max(marks)
+
+
+def _swap_state(state_path: str, merge):
+    """The foreachBatch `apply(batch_df, batch_id)` of every swap-class
+    `incremental_*` state: `merge(batch, prev)` returns the whole new
+    state frame from the pinned batch and the committed state (None
+    before the first commit); this helper makes it exactly-once.
+
+      - REPLAY: foreachBatch is at-least-once; the committed state dir
+        holds an empty `_hwm_<batch_id>` entry, and a batch at or
+        below that high-water mark returns without merging, so a
+        replayed batch merges exactly once.
+      - CRASH MID-SWAP: `_recover_swap` runs before every merge and
+        promotes the completed `._tmp_` (or restores `._old_`), so a
+        crash between the two renames can never make the next batch
+        silently rebuild state from its own partial alone.
+      - COMMIT: `_commit_swap` writes the state and its mark to a tmp
+        dir, then renames it into place.
+
+    The mark is not a data row: a raw `spark.read.parquet(state)`
+    holds exactly the state rows.  batch_id monotonicity is the
+    foreachBatch contract WITHIN one checkpoint lineage — a state is
+    bound to the checkpoint that built it; restarting against the
+    same state with a fresh checkpoint restarts batch ids and the
+    mark would misread new batches as replays.  A state dir with no
+    mark predates this layout and raises ValueError."""
+    from hadron_spark.sources import fs
+
+    def apply(batch_df, batch_id):
+        spark = batch_df.sparkSession
+        _recover_swap(spark, state_path)
+        prev = None
+        if fs.exists(spark, state_path):
+            if batch_id <= _swap_hwm(spark, state_path):
+                return  # replayed batch: already merged exactly once
+            prev = spark.read.parquet(state_path)
+        merged = merge(pin(batch_df), prev)
+        _commit_swap(spark, merged, state_path, batch_id, mark=True)
+
+    return apply
 
 
 def read_gram_state(spark, state_path: str) -> DataFrame:
-    """Consumer view of an `incremental_gram` state table: the
-    bookkeeping marker row is stripped and `g` is the one
-    correctly-rounded double cast of the exact accumulator — the
+    """Consumer view of an `incremental_gram` state table: `g` is the
+    one correctly-rounded double cast of the exact accumulator — the
     same (i, j, g) frame `gram_matrix` returns."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col("i") != F.lit(GRAM_MARK))
-        .select("i", "j", F.col("gx").cast("double").alias("g"))
+    return spark.read.parquet(state_path).select(
+        "i", "j", F.col("gx").cast("double").alias("g")
     )
 
 
@@ -385,34 +471,17 @@ def incremental_gram(
     test_embeddings), so at any point `read_gram_state(state) ==
     gram_matrix(all rows so far)` bit-for-bit, and PCA can be refit
     from the state table alone — the batch-recompute-free covariance
-    path for a corpus that grows nightly. State is d(d+1)/2+d+2 rows
+    path for a corpus that grows nightly. State is d(d+1)/2+d+1 rows
     regardless of stream volume.
 
-    Exactness under failure (the three at-least-once hazards):
-      - REPLAY: foreachBatch may re-deliver a batch after a restart;
-        the state carries the last-applied batch_id in a marker row
-        ((i,j)=(-2,-2)) and batches at or below the high-water mark
-        are skipped, so a replayed batch merges exactly once.
-      - CRASH MID-SWAP: `_recover_swap` runs before every merge and
-        promotes the completed `._tmp_` (or restores `._old_`), so a
-        crash between the two renames can never make the next batch
-        silently rebuild state from its own partial alone.
-      - DOUBLE DRIFT: state stores the DECIMAL(38,0) accumulator
-        (`gx`) and merges in decimal; doubles only appear in the
-        consumer view, as the single final cast — no round-trip
-        through float past 2^53.
-
-    Read the state through `read_gram_state` (strips the marker,
-    casts once to double).
+    Replays and crashes are handled by `_swap_state`.  Against DOUBLE
+    DRIFT the state stores the DECIMAL(38,0) accumulator (`gx`) and
+    merges in decimal; doubles only appear in the consumer view
+    (`read_gram_state`), as the single final cast — no round-trip
+    through float past 2^53.
 
     Returns the started StreamingQuery (availableNow trigger)."""
-    apply = gram_apply_fn(state_path, vec_col, quant)
-    writer = stream.writeStream.foreachBatch(apply).outputMode("append").trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, gram_apply_fn(state_path, vec_col, quant), checkpoint)
 
 
 def gram_apply_fn(
@@ -420,55 +489,23 @@ def gram_apply_fn(
 ):
     """The foreachBatch merge function behind `incremental_gram`,
     exposed so the replay/recovery contract is directly unit-testable
-    (call it with (batch_df, batch_id) like the stream runtime does).
-    batch_id monotonicity is the Structured Streaming foreachBatch
-    contract WITHIN one checkpoint lineage — a state table is bound
-    to the checkpoint that built it; restarting against the same
-    state with a fresh checkpoint restarts batch ids and the
-    high-water mark would misread new batches as replays."""
+    (call it with (batch_df, batch_id) like the stream runtime does)."""
     from hadron_spark.llm import embeddings as _E
-    from hadron_spark.sources import fs
 
     q = quant if quant is not None else _E.DEFAULT_QUANT
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm_row = (
-                prev.filter(F.col("i") == F.lit(GRAM_MARK))
-                .select("gx")
-                .collect()
-            )
-            if hwm_row and batch_id <= int(hwm_row[0]["gx"]):
-                return  # replayed batch: already merged exactly once
-        part = _E.gram_partials(
-            pin(batch_df), vec_col=vec_col, quant=q
-        )
-        if prev is not None:
-            merged = (
-                prev.filter(F.col("i") != F.lit(GRAM_MARK))
-                .select("i", "j", "gx")
-                .unionByName(part)
-                .groupBy("i", "j")
-                .agg(
-                    F.sum("gx").cast("decimal(38,0)").alias("gx")
-                )
-            )
-        else:
-            merged = part
-        marker = spark.range(1).select(
-            F.lit(GRAM_MARK).cast("int").alias("i"),
-            F.lit(GRAM_MARK).cast("int").alias("j"),
-            F.lit(int(batch_id)).cast("decimal(38,0)").alias("gx"),
-        )
-        _commit_swap(
-            spark, merged.unionByName(marker), state_path, batch_id
+    def merge(batch, prev):
+        part = _E.gram_partials(batch, vec_col=vec_col, quant=q)
+        if prev is None:
+            return part
+        return (
+            prev.select("i", "j", "gx")
+            .unionByName(part)
+            .groupBy("i", "j")
+            .agg(F.sum("gx").cast("decimal(38,0)").alias("gx"))
         )
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def _substring_marker_df(spark, hwm, base, window, segs=None):
@@ -581,7 +618,7 @@ def substring_dedup_apply_fn(
     one window probed with another silently admits every repeat, so
     drift raises.  States written by the pre-segment layout migrate
     in place on first touch.  Returns the apply(batch_df, batch_id)
-    callable (use with `stream.writeStream.foreachBatch(...)`)."""
+    callable that `streaming_substring_dedup` drives."""
     from hadron_spark.llm.dedup import (
         exact_substring_dedup_incremental,
         span_fingerprint_store,
@@ -722,12 +759,7 @@ def streaming_substring_dedup(
         state_path, out_path, id_col, text_col, window,
         compact_every=compact_every,
     )
-    writer = stream.writeStream.foreachBatch(apply).outputMode("append").trigger(
-        availableNow=True
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def perplexity_gate_apply_fn(
@@ -793,30 +825,15 @@ def streaming_perplexity_gate(
     apply = perplexity_gate_apply_fn(
         lm_path, out_path, min_logprob_per_token, id_col, text_col
     )
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-CMS_MARK = -2  # d = -2 row carries the batch high-water mark
+    return _start(stream, apply, checkpoint)
 
 
 def read_cms_state(spark, state_path: str) -> DataFrame:
-    """Consumer view of an `incremental_cms` state table: the
-    bookkeeping marker row is stripped — what remains is exactly the
+    """Consumer view of an `incremental_cms` state table: exactly the
     (d, bucket, cnt) frame `ops.cms_build` would return over every
     row the stream has delivered so far (CMS linearity, pinned in
     test_ops/test_streaming)."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col("d") != F.lit(CMS_MARK))
-        .select("d", "bucket", "cnt")
-    )
+    return spark.read.parquet(state_path).select("d", "bucket", "cnt")
 
 
 def cms_apply_fn(
@@ -827,49 +844,21 @@ def cms_apply_fn(
 ):
     """The foreachBatch merge function behind `incremental_cms`,
     exposed so the replay/recovery contract is directly unit-testable
-    (call it with (batch_df, batch_id) like the stream runtime does).
-    Same checkpoint-lineage caveat as `gram_apply_fn`: the state
-    table is bound to the checkpoint whose batch ids built it."""
+    (call it with (batch_df, batch_id) like the stream runtime does)."""
     from hadron_spark.operators import ops as _ops
-    from hadron_spark.sources import fs
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm_row = (
-                prev.filter(F.col("d") == F.lit(CMS_MARK))
-                .select("cnt")
-                .collect()
-            )
-            if hwm_row and batch_id <= int(hwm_row[0]["cnt"]):
-                return  # replayed batch: already merged exactly once
-        part = _ops.cms_build(
-            pin(batch_df),
-            key,
-            depth=depth,
-            width=width,
+    def merge(batch, prev):
+        part = _ops.cms_build(batch, key, depth=depth, width=width)
+        if prev is None:
+            return part
+        return (
+            prev.select("d", "bucket", "cnt")
+            .unionByName(part)
+            .groupBy("d", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        if prev is not None:
-            merged = (
-                prev.filter(F.col("d") != F.lit(CMS_MARK))
-                .select("d", "bucket", "cnt")
-                .unionByName(part)
-                .groupBy("d", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = part
-        marker = spark.range(1).select(
-            F.lit(CMS_MARK).cast("int").alias("d"),
-            F.lit(CMS_MARK).cast("long").alias("bucket"),
-            F.lit(int(batch_id)).cast("long").alias("cnt"),
-        )
-        _commit_swap(spark, merged.unionByName(marker), state_path, batch_id)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_cms(
@@ -883,7 +872,7 @@ def incremental_cms(
     """Streaming maintenance of a count-min sketch over an unbounded
     key stream: each micro-batch is sketched with the SAME
     `ops.cms_build` pass as the batch op and merged into a tiny
-    parquet state table (<= depth*width + 1 rows REGARDLESS of stream
+    parquet state table (<= depth*width rows REGARDLESS of stream
     volume) by (d, bucket) sum — CMS linearity makes the merge exact,
     so at any point `read_cms_state(state)` is bit-identical to
     sketching every delivered row in one batch, independent of how
@@ -893,22 +882,12 @@ def incremental_cms(
     for an unbounded token stream grows without bound, the sketch
     does not — heavy-hitter queries (`ops.cms_estimate` /
     `cms_heavy_hitters` against the state) stay O(depth*width).
-
-    Exactness under failure: the same trio as `incremental_gram` —
-    batch-id high-water mark in a marker row (replays merge exactly
-    once), `_recover_swap` heals interrupted tmp-then-rename swaps,
-    and all counts are exact longs.
+    All counts are exact longs; replays and crashes are handled by
+    `_swap_state`.
 
     Returns the started StreamingQuery (availableNow trigger)."""
     apply = cms_apply_fn(state_path, key, depth=depth, width=width)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def hll_apply_fn(
@@ -919,34 +898,20 @@ def hll_apply_fn(
 ):
     """The foreachBatch merge function behind `incremental_hll`,
     exposed for direct unit testing (call with (batch_df, batch_id)).
-
-    Unlike the Gram/CMS states there is NO high-water-mark row: HLL
-    union is register-wise max — associative, commutative, and
-    IDEMPOTENT — so an at-least-once replay that re-unions the same
-    batch's sketch is algebraically a no-op.  Exactly-once comes
-    from the algebra, not bookkeeping (pinned in
-    test_incremental_hll_replay).  The swap-crash healing is still
-    needed (a half-written state file is not an algebra problem)."""
+    HLL union is register-wise max — associative, commutative, and
+    IDEMPOTENT — so re-unioning a replayed batch's sketch would be a
+    no-op even without `_swap_state`'s high-water mark."""
     from hadron_spark.operators import sketch as _sketch
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        from hadron_spark.sources import fs
+    def merge(batch, prev):
+        part = _sketch.hll_rollup(batch, keys, col, lg_k=lg_k)
+        if prev is None:
+            return part
+        return _sketch.hll_merge(prev.unionByName(part), keys)
 
-        part = _sketch.hll_rollup(
-            pin(batch_df), keys, col, lg_k=lg_k
-        )
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            merged = _sketch.hll_merge(prev.unionByName(part), keys)
-        else:
-            merged = part
-        _commit_swap(spark, merged, state_path, batch_id)
-
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_hll(
@@ -968,37 +933,19 @@ def incremental_hll(
 
     Returns the started StreamingQuery (availableNow trigger)."""
     apply = hll_apply_fn(state_path, key_cols, col, lg_k=lg_k)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def moments_apply_fn(state_path: str, key: str, value: str):
     """The foreachBatch merge behind `incremental_moments`, exposed
     for direct replay/recovery unit tests (call with (batch_df,
-    batch_id)).  State schema: (key, n, sy, syy) exact longs — the
-    marker row (key NULL) carries the batch high-water mark in `n`.
-    NULL stream keys are dropped (the NULL slot is the marker's)."""
-    from hadron_spark.sources import fs
+    batch_id)).  State schema: (key, n, sy, syy) exact longs.  NULL
+    stream keys are dropped."""
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col(key).isNull()).select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return  # replayed batch: already merged exactly once
+    def merge(batch, prev):
         y = F.col(value).cast("long")
         part = (
-            pin(batch_df)
-            .filter(F.col(key).isNotNull())
+            batch.filter(F.col(key).isNotNull())
             .groupBy(key)
             .agg(
                 F.count(F.lit(1)).alias("n"),
@@ -1006,28 +953,20 @@ def moments_apply_fn(state_path: str, key: str, value: str):
                 F.sum(y * y).alias("syy"),
             )
         )
-        if prev is not None:
-            merged = (
-                prev.filter(F.col(key).isNotNull())
-                .unionByName(part)
-                .groupBy(key)
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("sy").alias("sy"),
-                    F.sum("syy").alias("syy"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.select(key, "n", "sy", "syy")
+            .unionByName(part)
+            .groupBy(key)
+            .agg(
+                F.sum("n").alias("n"),
+                F.sum("sy").alias("sy"),
+                F.sum("syy").alias("syy"),
             )
-        else:
-            merged = part
-        marker = spark.range(1).select(
-            F.lit(None).cast(merged.schema[key].dataType).alias(key),
-            F.lit(int(batch_id)).cast("long").alias("n"),
-            F.lit(0).cast("long").alias("sy"),
-            F.lit(0).cast("long").alias("syy"),
         )
-        _commit_swap(spark, merged.unionByName(marker), state_path, batch_id)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_moments(
@@ -1047,33 +986,19 @@ def incremental_moments(
     (the incremental_gram/CMS batch-boundary-independence contract,
     here with a FULL SQL oracle since the state is plain integers).
 
-    Exactness under failure: batch-id high-water mark in the marker
-    row (at-least-once replays merge exactly once) + `_recover_swap`
-    healing of interrupted tmp-then-rename swaps.  Quantize values
-    to integer units (cents) upstream — that is what makes the sums
-    exact; floats would make the merge order-sensitive.
+    Replays and crashes are handled by `_swap_state`.  Quantize
+    values to integer units (cents) upstream — that is what makes the
+    sums exact; floats would make the merge order-sensitive.
 
     Read back with `read_moments_state`.  Returns the started
     StreamingQuery (availableNow trigger)."""
-    apply = moments_apply_fn(state_path, key, value)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, moments_apply_fn(state_path, key, value), checkpoint)
 
 
 def read_moments_state(spark, state_path: str, key: str) -> DataFrame:
     """The queryable surface of `incremental_moments`: (key, n, sy,
-    syy) exact longs, marker row stripped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col(key).isNotNull())
-        .select(key, "n", "sy", "syy")
-    )
+    syy) exact longs."""
+    return spark.read.parquet(state_path).select(key, "n", "sy", "syy")
 
 
 def topk_apply_fn(
@@ -1085,49 +1010,32 @@ def topk_apply_fn(
 ):
     """The foreachBatch merge behind `incremental_topk` (call with
     (batch_df, batch_id) to unit-test replay/recovery).  State: the
-    per-key top-k (id, score) rows + a marker row (key NULL, its
-    `n` = batch high-water mark).  Merging is union → re-rank →
-    keep k: top-k of a union is the top-k of top-ks (associative),
+    per-key top-k (key, id, score) rows.  Merging is union → re-rank
+    → keep k: top-k of a union is the top-k of top-ks (associative),
     and re-merging the SAME rows is a no-op under the per-id
     max(score) merge — but at-least-once replay of a batch
     containing a row that TIED at the boundary could flip the cut,
-    so the HWM guard is kept (belt and braces, same trio as
-    Gram/CMS).  SCORE CONTRACT (ADVICE r4): scores per id must be
-    immutable or monotone non-decreasing across deliveries — the
-    state keeps each id's MAX seen score and top-k state cannot
-    evict on a decrease (the stale row may already have displaced
-    others at an earlier cut).  For mutable scores keep the full
-    (key, id, score) table and derive top-k on read."""
+    so `_swap_state`'s high-water mark still matters here.  SCORE
+    CONTRACT (ADVICE r4): scores per id must be immutable or
+    monotone non-decreasing across deliveries — the state keeps each
+    id's MAX seen score and top-k state cannot evict on a decrease
+    (the stale row may already have displaced others at an earlier
+    cut).  For mutable scores keep the full (key, id, score) table
+    and derive top-k on read.  NULL stream keys are dropped."""
     from pyspark.sql import Window
 
-    from hadron_spark.sources import fs
-
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col(key).isNull()).select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return
-        part = (
-            pin(batch_df)
-            .filter(F.col(key).isNotNull())
-            .select(
-                key,
-                F.col(id_col).alias("id"),
-                F.col(score).cast("long").alias("score"),
-            )
-        )
-        if prev is not None:
-            part = prev.filter(F.col(key).isNotNull()).select(
-                key, "id", "score"
-            ).unionByName(part)
+    def merge(batch, prev):
         w = Window.partitionBy(key).orderBy(
             F.col("score").desc(), F.col("id").asc()
         )
-        top = (
+        part = batch.filter(F.col(key).isNotNull()).select(
+            key,
+            F.col(id_col).alias("id"),
+            F.col(score).cast("long").alias("score"),
+        )
+        if prev is not None:
+            part = prev.select(key, "id", "score").unionByName(part)
+        return (
             # per-id merge rule: MAX score (deterministic —
             # dropDuplicates kept an arbitrary row; ADVICE r4).
             # Top-k state can never evict on a score DECREASE (the
@@ -1139,17 +1047,9 @@ def topk_apply_fn(
             .withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= k)
             .select(key, "id", "score")
-            .withColumn("n", F.lit(None).cast("long"))
         )
-        marker = spark.range(1).select(
-            F.lit(None).cast(top.schema[key].dataType).alias(key),
-            F.lit(None).cast(top.schema["id"].dataType).alias("id"),
-            F.lit(0).cast("long").alias("score"),
-            F.lit(int(batch_id)).cast("long").alias("n"),
-        )
-        _commit_swap(spark, top.unionByName(marker), state_path, batch_id)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_topk(
@@ -1174,26 +1074,15 @@ def incremental_topk(
 
     Integer scores (quantize upstream) — which is also what makes
     the FULL SQL oracle possible: the final state equals a plain
-    windowed top-k over the whole input.  Failure trio as
-    Gram/CMS.  Read back with `read_topk_state`."""
+    windowed top-k over the whole input.  Read back with
+    `read_topk_state`."""
     apply = topk_apply_fn(state_path, key, id_col, score, k=k)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_topk_state(spark, state_path: str, key: str) -> DataFrame:
-    """(key, id, score) per-key top-k rows, marker stripped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col(key).isNotNull())
-        .select(key, "id", "score")
-    )
+    """(key, id, score) per-key top-k rows."""
+    return spark.read.parquet(state_path).select(key, "id", "score")
 
 
 def histogram_apply_fn(
@@ -1208,25 +1097,14 @@ def histogram_apply_fn(
     with (batch_df, batch_id) to unit-test replay/recovery).  State
     schema: (key, bin, cnt) exact longs — bin -1 is underflow
     (value < lo), bin `n_bins` overflow (value >= hi), interior bin
-    = (value−lo)·n_bins div (hi−lo), all integer math.  The marker
-    row (key NULL, bin NULL) carries the batch high-water mark in
-    `cnt`; NULL stream keys are dropped (the NULL slot is the
-    marker's)."""
+    = (value−lo)·n_bins div (hi−lo), all integer math.  NULL stream
+    keys are dropped."""
     if not lo < hi:
         raise ValueError(f"lo must be < hi: {lo}/{hi}")
     if n_bins < 1:
         raise ValueError(f"n_bins must be >= 1: {n_bins}")
-    from hadron_spark.sources import fs
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col(key).isNull()).select("cnt").collect()
-            if hwm and batch_id <= int(hwm[0]["cnt"]):
-                return  # replayed batch: already merged exactly once
+    def merge(batch, prev):
         y = F.col(value).cast("long")
         b = (
             F.when(y < lo, F.lit(-1))
@@ -1240,29 +1118,21 @@ def histogram_apply_fn(
             .cast("int")
         )
         part = (
-            pin(batch_df)
-            .filter(F.col(key).isNotNull())
+            batch.filter(F.col(key).isNotNull())
             .select(key, b.alias("bin"))
             .groupBy(key, "bin")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        if prev is not None:
-            merged = (
-                prev.filter(F.col(key).isNotNull())
-                .unionByName(part)
-                .groupBy(key, "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = part
-        marker = spark.range(1).select(
-            F.lit(None).cast(merged.schema[key].dataType).alias(key),
-            F.lit(None).cast("int").alias("bin"),
-            F.lit(int(batch_id)).cast("long").alias("cnt"),
+        if prev is None:
+            return part
+        return (
+            prev.select(key, "bin", "cnt")
+            .unionByName(part)
+            .groupBy(key, "bin")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        _commit_swap(spark, merged.unionByName(marker), state_path, batch_id)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_histogram(
@@ -1286,29 +1156,16 @@ def incremental_histogram(
 
     Quantize values to integer units (cents/micros) upstream; bin
     edges are pure integer math so every engine bins identically.
-    Failure trio (batch-id HWM replay guard, `_recover_swap` crash
-    healing, idempotent tmp-then-rename) as Gram/CMS — pinned in
-    test_streaming.  Read back with `read_histogram_state`; derive
-    exact rank-target quantiles with `histogram_quantiles`.
-    Returns the started StreamingQuery (availableNow trigger)."""
+    Read back with `read_histogram_state`; derive exact rank-target
+    quantiles with `histogram_quantiles`.  Returns the started
+    StreamingQuery (availableNow trigger)."""
     apply = histogram_apply_fn(state_path, key, value, lo, hi, n_bins)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_histogram_state(spark, state_path: str, key: str) -> DataFrame:
-    """(key, bin, cnt) per-key bin counts, marker row stripped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col(key).isNotNull())
-        .select(key, "bin", "cnt")
-    )
+    """(key, bin, cnt) per-key bin counts."""
+    return spark.read.parquet(state_path).select(key, "bin", "cnt")
 
 
 def histogram_quantiles(
@@ -1371,8 +1228,7 @@ def transitions_apply_fn(
     key); the first event an entity contributes to a later batch
     pairs with that stored tail.  State is one parquet frame with a
     `kind` discriminator: 't' transition counts (from_state,
-    to_state, n), 'e' entity tails (e, last_state, last_ord), 'm'
-    the batch high-water marker (n).
+    to_state, n), 'e' entity tails (e, last_state, last_ord).
 
     Ordering contract: `ord_col` (cast to long) must be a total
     order per entity, and deliveries must be non-decreasing in it
@@ -1380,30 +1236,18 @@ def transitions_apply_fn(
     batch — a lead window sorts them).  Under that contract the
     state after ANY batch chopping equals `operators.ops.
     transition_matrix` over every delivered row (pinned in
-    test_streaming).  Same exactly-once trio as the other
-    incremental_* states: HWM no-op on at-least-once replay,
-    `_recover_swap` healing, tmp-then-rename commit."""
+    test_streaming)."""
+    from functools import reduce
+
     from pyspark.sql import Window
 
-    from hadron_spark.sources import fs
-
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col("kind") == "m").select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return  # replayed batch: already merged exactly once
-        b = (
-            pin(batch_df)
-            .filter(F.col(entity).isNotNull() & F.col(state_col).isNotNull())
-            .select(
-                F.col(entity).alias("e"),
-                F.col(state_col).alias("s"),
-                F.col(ord_col).cast("long").alias("o"),
-            )
+    def merge(batch, prev):
+        b = batch.filter(
+            F.col(entity).isNotNull() & F.col(state_col).isNotNull()
+        ).select(
+            F.col(entity).alias("e"),
+            F.col(state_col).alias("s"),
+            F.col(ord_col).cast("long").alias("o"),
         )
         w = Window.partitionBy("e").orderBy("o")
         in_batch = (
@@ -1443,8 +1287,6 @@ def transitions_apply_fn(
             )
             trans += [prev_t, boundary]
             tails.append(prev_e)
-        from functools import reduce
-
         merged_t = (
             reduce(lambda a, x: a.unionByName(x), trans)
             .groupBy("from_state", "to_state")
@@ -1462,39 +1304,22 @@ def transitions_apply_fn(
         )
         etype = merged_e.schema["e"].dataType
         stype = merged_t.schema["from_state"].dataType
-        nulls = {
-            "e": F.lit(None).cast(etype),
-            "from_state": F.lit(None).cast(stype),
-            "to_state": F.lit(None).cast(stype),
-            "last_state": F.lit(None).cast(stype),
-            "last_ord": F.lit(None).cast("long"),
-        }
         t_rows = merged_t.select(
-            F.lit("t").alias("kind"), nulls["e"].alias("e"),
+            F.lit("t").alias("kind"), F.lit(None).cast(etype).alias("e"),
             "from_state", "to_state",
-            nulls["last_state"].alias("last_state"),
-            nulls["last_ord"].alias("last_ord"), F.col("n").cast("long"),
+            F.lit(None).cast(stype).alias("last_state"),
+            F.lit(None).cast("long").alias("last_ord"),
+            F.col("n").cast("long"),
         )
         e_rows = merged_e.select(
             F.lit("e").alias("kind"), "e",
-            nulls["from_state"].alias("from_state"),
-            nulls["to_state"].alias("to_state"),
+            F.lit(None).cast(stype).alias("from_state"),
+            F.lit(None).cast(stype).alias("to_state"),
             "last_state", "last_ord", F.lit(None).cast("long").alias("n"),
         )
-        marker = spark.range(1).select(
-            F.lit("m").alias("kind"), nulls["e"].alias("e"),
-            nulls["from_state"].alias("from_state"),
-            nulls["to_state"].alias("to_state"),
-            nulls["last_state"].alias("last_state"),
-            nulls["last_ord"].alias("last_ord"),
-            F.lit(int(batch_id)).cast("long").alias("n"),
-        )
-        _commit_swap(
-            spark, t_rows.unionByName(e_rows).unionByName(marker),
-            state_path, batch_id,
-        )
+        return t_rows.unionByName(e_rows)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_transitions(
@@ -1516,14 +1341,7 @@ def incremental_transitions(
     row_total, prob) frame as the batch operator).  Returns the
     started StreamingQuery (availableNow trigger)."""
     apply = transitions_apply_fn(state_path, entity, state_col, ord_col)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_transitions_state(spark, state_path: str) -> DataFrame:
@@ -1562,15 +1380,11 @@ def ewma_apply_fn(
     `incremental_transitions` ordering contract; rows may arrive
     unordered WITHIN a batch — the sorted-array fold handles that).
 
-    State is ONE parquet frame with a `kind` discriminator — 'k'
-    rows (k, e, o, n) = (key, current ewma, last order key, points
-    seen) and the 'm' batch high-water marker — |keys| rows total
-    regardless of stream volume, so the whole-frame tmp-then-rename
-    swap of the scalar incremental_* states applies (HWM replay
-    no-op, `_recover_swap` healing)."""
+    State is one (k, e, o, n) = (key, current ewma, last order key,
+    points seen) row per key — |keys| rows regardless of stream
+    volume."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    from hadron_spark.sources import fs
 
     a, b = repr(float(alpha)), repr(1.0 - float(alpha))
     fold = (
@@ -1579,27 +1393,15 @@ def ewma_apply_fn(
         f"IF(acc.prev IS NULL, x._y, {a} * x._y + {b} * acc.prev)), "
         "acc -> acc.prev)"
     )
-    schema = "kind string, k string, e double, o long, n long"
+    schema = "k string, e double, o long, n long"
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col("kind") == "m").select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return  # replayed batch: already merged exactly once
-        rows = (
-            pin(batch_df)
-            .filter(
-                F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-            )
-            .select(
-                F.col(key_col).cast("string").alias("k"),
-                F.col(ord_col).cast("long").alias("_o"),
-                F.col(value_col).cast("double").alias("_y"),
-            )
+    def merge(batch, prev):
+        rows = batch.filter(
+            F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
+        ).select(
+            F.col(key_col).cast("string").alias("k"),
+            F.col(ord_col).cast("long").alias("_o"),
+            F.col(value_col).cast("double").alias("_y"),
         )
         arrs = rows.groupBy("k").agg(
             F.sort_array(F.collect_list(F.struct("_o", "_y"))).alias("_s"),
@@ -1607,40 +1409,25 @@ def ewma_apply_fn(
             F.count(F.lit(1)).alias("_nb"),
         )
         state_k = (
-            prev.filter(F.col("kind") == "k").select("k", "e", "o", "n")
-            if prev is not None
-            else spark.createDataFrame([], schema).select("k", "e", "o", "n")
+            prev if prev is not None
+            else batch.sparkSession.createDataFrame([], schema)
+        ).select("k", "e", "o", "n")
+        touched = arrs.join(
+            state_k.select(
+                "k", F.col("e").alias("_e0"), F.col("n").alias("_n0")
+            ),
+            "k",
+            "left",
+        ).select(
+            "k",
+            F.expr(fold).alias("e"),
+            F.col("_ob").alias("o"),
+            (F.coalesce(F.col("_n0"), F.lit(0)) + F.col("_nb")).alias("n"),
         )
-        touched = (
-            arrs.join(
-                state_k.select(
-                    "k",
-                    F.col("e").alias("_e0"),
-                    F.col("n").alias("_n0"),
-                ),
-                "k",
-                "left",
-            )
-            .select(
-                F.lit("k").alias("kind"),
-                "k",
-                F.expr(fold).alias("e"),
-                F.col("_ob").alias("o"),
-                (F.coalesce(F.col("_n0"), F.lit(0)) + F.col("_nb")).alias(
-                    "n"
-                ),
-            )
-        )
-        untouched = state_k.join(arrs.select("k"), "k", "left_anti").select(
-            F.lit("k").alias("kind"), "k", "e", "o", "n"
-        )
-        marker = spark.createDataFrame(
-            [("m", None, None, None, int(batch_id))], schema
-        )
-        merged = touched.unionByName(untouched).unionByName(marker)
-        _commit_swap(spark, merged, state_path, batch_id)
+        untouched = state_k.join(arrs.select("k"), "k", "left_anti")
+        return touched.unionByName(untouched)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_ewma(
@@ -1655,32 +1442,20 @@ def incremental_ewma(
     """Streaming per-key EWMA (`operators.ops.ewma` kept live — the
     causal smoother behind drift alerts, maintained over an unbounded
     stream with |keys|-bounded state).  See `ewma_apply_fn` for the
-    chop-equivalence contract and the exactly-once trio; read back
-    with `read_ewma_state`.  Returns the started StreamingQuery
-    (availableNow trigger)."""
+    chop-equivalence contract; read back with `read_ewma_state`.
+    Returns the started StreamingQuery (availableNow trigger)."""
     apply = ewma_apply_fn(state_path, key_col, ord_col, value_col, alpha)
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_ewma_state(spark, state_path: str) -> DataFrame:
     """Queryable surface of `incremental_ewma`: (key, ewma, last_ord,
-    n_points) — the bookkeeping marker stripped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col("kind") == "k")
-        .select(
-            F.col("k").alias("key"),
-            F.col("e").alias("ewma"),
-            F.col("o").alias("last_ord"),
-            F.col("n").alias("n_points"),
-        )
+    n_points)."""
+    return spark.read.parquet(state_path).select(
+        F.col("k").alias("key"),
+        F.col("e").alias("ewma"),
+        F.col("o").alias("last_ord"),
+        F.col("n").alias("n_points"),
     )
 
 
@@ -2025,14 +1800,7 @@ def incremental_near_dup(
         shingle_k, max_bucket_size, compact_every,
         store_buckets=store_buckets, probe_key_limit=probe_key_limit,
     )
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def _neardup_marker(spark, state_path: str) -> str:
@@ -2291,12 +2059,8 @@ def cusum_apply_fn(
     literals via repr(), so both engines parse the identical
     double; every step is a fixed add/compare chain — hash-exact.
 
-    State is ONE parquet frame, 'k' rows (k, sp, sm, o, n, al) +
-    the 'm' high-water marker — |keys| rows regardless of volume
-    (swap class in the module table; whole-frame tmp-then-rename,
-    HWM replay no-op, `_recover_swap` healing)."""
-    from hadron_spark.sources import fs
-
+    State is one (k, sp, sm, o, n, al) row per key — |keys| rows
+    regardless of volume."""
     up = repr(float(target) + float(slack))
     lo = repr(float(target) - float(slack))
     h = repr(float(threshold))
@@ -2311,30 +2075,15 @@ def cusum_apply_fn(
         f"'sm', IF({sm1} > {h}, 0.0d, {sm1}), "
         f"'al', acc.al + IF({sp1} > {h}, 1, 0) + IF({sm1} > {h}, 1, 0)))"
     )
-    schema = (
-        "kind string, k string, sp double, sm double, o long, n long, "
-        "al long"
-    )
+    schema = "k string, sp double, sm double, o long, n long, al long"
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col("kind") == "m").select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return  # replayed batch: already merged exactly once
-        rows = (
-            pin(batch_df)
-            .filter(
-                F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-            )
-            .select(
-                F.col(key_col).cast("string").alias("k"),
-                F.col(ord_col).cast("long").alias("_o"),
-                F.col(value_col).cast("double").alias("_y"),
-            )
+    def merge(batch, prev):
+        rows = batch.filter(
+            F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
+        ).select(
+            F.col(key_col).cast("string").alias("k"),
+            F.col(ord_col).cast("long").alias("_o"),
+            F.col(value_col).cast("double").alias("_y"),
         )
         arrs = rows.groupBy("k").agg(
             F.sort_array(F.collect_list(F.struct("_o", "_y"))).alias("_s"),
@@ -2342,14 +2091,9 @@ def cusum_apply_fn(
             F.count(F.lit(1)).alias("_nb"),
         )
         state_k = (
-            prev.filter(F.col("kind") == "k").select(
-                "k", "sp", "sm", "o", "n", "al"
-            )
-            if prev is not None
-            else spark.createDataFrame([], schema).select(
-                "k", "sp", "sm", "o", "n", "al"
-            )
-        )
+            prev if prev is not None
+            else batch.sparkSession.createDataFrame([], schema)
+        ).select("k", "sp", "sm", "o", "n", "al")
         touched = (
             arrs.join(
                 state_k.select(
@@ -2364,7 +2108,6 @@ def cusum_apply_fn(
             )
             .withColumn("_f", F.expr(fold))
             .select(
-                F.lit("k").alias("kind"),
                 "k",
                 F.col("_f.sp").alias("sp"),
                 F.col("_f.sm").alias("sm"),
@@ -2377,16 +2120,10 @@ def cusum_apply_fn(
                 ),
             )
         )
-        untouched = state_k.join(arrs.select("k"), "k", "left_anti").select(
-            F.lit("k").alias("kind"), "k", "sp", "sm", "o", "n", "al"
-        )
-        marker = spark.createDataFrame(
-            [("m", None, None, None, None, int(batch_id), None)], schema
-        )
-        merged = touched.unionByName(untouched).unionByName(marker)
-        _commit_swap(spark, merged, state_path, batch_id)
+        untouched = state_k.join(arrs.select("k"), "k", "left_anti")
+        return touched.unionByName(untouched)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_cusum(
@@ -2404,37 +2141,24 @@ def incremental_cusum(
     `operators.ops.cusum_changepoint` answers WHEN a finished series
     shifted; this one raises the flag LIVE as the stream drifts off
     `target`.  See `cusum_apply_fn` for the chop-equivalence
-    contract and the exactly-once trio; read back with
-    `read_cusum_state`.  Returns the started StreamingQuery
-    (availableNow trigger)."""
+    contract; read back with `read_cusum_state`.  Returns the started
+    StreamingQuery (availableNow trigger)."""
     apply = cusum_apply_fn(
         state_path, key_col, ord_col, value_col, target, slack, threshold
     )
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_cusum_state(spark, state_path: str) -> DataFrame:
     """Queryable surface of `incremental_cusum`: (key, s_pos, s_neg,
-    last_ord, n_points, n_alarms) — the bookkeeping marker
-    stripped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col("kind") == "k")
-        .select(
-            F.col("k").alias("key"),
-            F.col("sp").alias("s_pos"),
-            F.col("sm").alias("s_neg"),
-            F.col("o").alias("last_ord"),
-            F.col("n").alias("n_points"),
-            F.col("al").alias("n_alarms"),
-        )
+    last_ord, n_points, n_alarms)."""
+    return spark.read.parquet(state_path).select(
+        F.col("k").alias("key"),
+        F.col("sp").alias("s_pos"),
+        F.col("sm").alias("s_neg"),
+        F.col("o").alias("last_ord"),
+        F.col("n").alias("n_points"),
+        F.col("al").alias("n_alarms"),
     )
 
 
@@ -2467,12 +2191,9 @@ def holt_winters_apply_fn(
     scan — the `incremental_ewma` contract, same per-key
     non-decreasing `ord_col` requirement across batches.
 
-    State is ONE parquet frame: 'k' rows (k, l, b, ring, o, n),
-    'w' warm-up rows (k, o, y), the 'm' HWM marker —
-    O(keys·period) regardless of volume (swap class: whole-frame
-    tmp-then-rename, HWM replay no-op, `_recover_swap` healing)."""
-    from hadron_spark.sources import fs
-
+    State is ONE parquet frame: 'k' rows (k, l, b, ring, o, n) and
+    'w' warm-up rows (k, o, y) — O(keys·period) regardless of
+    volume."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     for nm, v in (("beta", beta), ("gamma", gamma)):
@@ -2524,27 +2245,15 @@ def holt_winters_apply_fn(
         "ring array<double>, o long, n long, y double"
     )
 
-    def apply(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        _recover_swap(spark, state_path)
-        prev = None
-        if fs.exists(spark, state_path):
-            prev = spark.read.parquet(state_path)
-            hwm = prev.filter(F.col("kind") == "m").select("n").collect()
-            if hwm and batch_id <= int(hwm[0]["n"]):
-                return  # replayed batch: already merged exactly once
-        rows = (
-            pin(batch_df)
-            .filter(
-                F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-            )
-            .select(
-                F.col(key_col).cast("string").alias("k"),
-                F.col(ord_col).cast("long").alias("_o"),
-                F.col(value_col).cast("double").alias("_y"),
-            )
+    def merge(batch, prev):
+        rows = batch.filter(
+            F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
+        ).select(
+            F.col(key_col).cast("string").alias("k"),
+            F.col(ord_col).cast("long").alias("_o"),
+            F.col(value_col).cast("double").alias("_y"),
         )
-        empty = spark.createDataFrame([], schema)
+        empty = batch.sparkSession.createDataFrame([], schema)
         state_k = (
             prev.filter(F.col("kind") == "k")
             if prev is not None
@@ -2633,19 +2342,13 @@ def holt_winters_apply_fn(
                 F.col("_z._y").alias("y"),
             )
         )
-        marker = spark.createDataFrame(
-            [("m", None, None, None, None, None, int(batch_id), None)],
-            schema,
-        )
-        merged = (
+        return (
             adv.unionByName(untouched_k)
             .unionByName(seat)
             .unionByName(buffer)
-            .unionByName(marker)
         )
-        _commit_swap(spark, merged, state_path, batch_id)
 
-    return apply
+    return _swap_state(state_path, merge)
 
 
 def incremental_holt_winters(
@@ -2669,14 +2372,7 @@ def incremental_holt_winters(
         state_path, key_col, ord_col, value_col, period, alpha, beta,
         gamma,
     )
-    writer = (
-        stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(stream, apply, checkpoint)
 
 
 def read_hw_state(spark, state_path: str) -> DataFrame:

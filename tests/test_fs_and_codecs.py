@@ -95,7 +95,8 @@ def test_compact_merges_small_files(spark, tmp_path):
 
     before = len(glob.glob(out + "/*.parquet"))
     assert before == 20
-    fs.compact(spark, out, target_file_bytes=1 << 30)
+    n = fs.compact(spark, out, target_file_bytes=1 << 30)
     after = len(glob.glob(out + "/*.parquet"))
     assert after == 1
+    assert n == after
     assert spark.read.parquet(out).count() == 10_000

@@ -813,24 +813,6 @@ def test_kmeans_broadcast_backend_agrees(spark, sf_dir):
         kmeans(emb, k=4, iters=1, init="farthest", max_literal_centroids=1)
 
 
-def test_brute_force_backends_agree(spark, sf_dir):
-    """The Arrow/numpy scorer and the codegen'd expression must rank
-    identically (scores may differ in the last ulp; neighbor sets and
-    order may not)."""
-    from hadron_spark.llm.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 3)
-
-    def ranking(backend):
-        rows = brute_force_topk(emb, q, k=5, backend=backend).collect()
-        return {
-            (r["query_id"], r["rank"]): r["neighbor_id"] for r in rows
-        }
-
-    assert ranking("expr") == ranking("pandas")
-
-
 def test_lsh_recall_floor_on_clustered_fixture(spark):
     """RECALL.md's claim that sign-LSH earns its keep on clustered
     embedding distributions, pinned: on Gaussian blobs LSH recall@10

@@ -93,6 +93,40 @@ def test_partition_stats_counts_every_row(spark, sf_dir):
     assert len(st) <= 8
 
 
+def _bench_scale(monkeypatch, sf: str, cpus: int) -> None:
+    """Make bench.run_scale() read (sf, cpus) for this test."""
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", f"/data/{sf}")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+
+
+def test_bench_regression_verdicts_match_sf_and_cpus(tmp_path, monkeypatch):
+    """The prior is the newest BENCH_r*.json recorded at this run's sf
+    AND cpus — a newer recording at another scale is skipped, and a
+    run with no same-scale prior gets no verdicts at all."""
+    import json
+    import sys
+
+    sys.path.insert(0, REPO_ROOT)
+    import bench
+
+    prior = {"qa": 1.0, "qb": 2.0, "qc": 0.5}
+    for name, sf, cpus in (("BENCH_r06.json", 0.001, 2),
+                           ("BENCH_r07.json", 0.1, 2),
+                           ("BENCH_r08.json", 0.1, 32)):
+        (tmp_path / name).write_text(json.dumps(
+            {"sf": sf, "cpus": cpus, "parsed": {"queries": prior}}
+        ))
+    monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
+    _bench_scale(monkeypatch, "sf0.001", 2)
+    assert bench.regression_verdicts(prior)["prior_bench"] == "BENCH_r06.json"
+    _bench_scale(monkeypatch, "sf0.1", 2)
+    assert bench.regression_verdicts(prior)["prior_bench"] == "BENCH_r07.json"
+    _bench_scale(monkeypatch, "sf0.01", 2)
+    assert bench.regression_verdicts(prior) == {}
+    _bench_scale(monkeypatch, "sf0.1", 8)
+    assert bench.regression_verdicts(prior) == {}
+
+
 def test_bench_regression_verdicts(tmp_path, monkeypatch):
     """The machine like-for-like gate: uniform machine jitter is
     absorbed by the median ratio; a true per-query regression is
@@ -105,11 +139,12 @@ def test_bench_regression_verdicts(tmp_path, monkeypatch):
 
     prior = {"qa": 1.0, "qb": 2.0, "qc": 0.5, "qd": 4.0}
     (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"parsed": {"queries": prior}})
+        json.dumps({"sf": 0.1, "cpus": 4, "parsed": {"queries": prior}})
     )
     monkeypatch.setattr(
         bench.os.path, "dirname", lambda p: str(tmp_path)
     )
+    _bench_scale(monkeypatch, "sf0.1", 4)
     cur = {q: v * 1.2 for q, v in prior.items()}
     cur["qb"] = prior["qb"] * 2.4  # 2x after normalization
     v = bench.regression_verdicts(cur)
@@ -139,9 +174,10 @@ def test_bench_regression_verdicts_tail_recovery(tmp_path, monkeypatch):
         '"ratio": 2.0, "normalized": 1.8}}}\n'
     )
     (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"parsed": None, "tail": tail})
+        json.dumps({"sf": 0.1, "cpus": 4, "parsed": None, "tail": tail})
     )
     monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
+    _bench_scale(monkeypatch, "sf0.1", 4)
     cur = {"q1_a": 1.0, "q2_b": 4.0, "q3_c": 0.5, "q4_d": 4.0}
     v = bench.regression_verdicts(cur)
     assert v["median_ratio"] == 1.0
@@ -168,9 +204,10 @@ def test_bench_tail_recovery_anchors_last_queries_block(tmp_path, monkeypatch):
         '{"metric": "m", "value": 3.0, "queries": {"q1_a": 1.0, "q2_b": 2.0, "q3_c": 0.5}, "sf": 0.1}\n'
     )
     (tmp_path / "BENCH_r07.json").write_text(
-        json.dumps({"parsed": None, "tail": tail})
+        json.dumps({"sf": 0.1, "cpus": 4, "parsed": None, "tail": tail})
     )
     monkeypatch.setattr(bench.os.path, "dirname", lambda p: str(tmp_path))
+    _bench_scale(monkeypatch, "sf0.1", 4)
     cur = {"q1_a": 1.0, "q2_b": 2.0, "q3_c": 0.5}
     v = bench.regression_verdicts(cur)
     # priors come from the SECOND (newest) line: ratios are all 1.0

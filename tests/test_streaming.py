@@ -485,8 +485,8 @@ def test_incremental_cms_replay_and_recovery(spark, sf_dir, tmp_path):
 def test_incremental_hll_matches_batch_and_replay(spark, sf_dir, tmp_path):
     """Streamed per-key HLL estimates equal the one-shot batch
     sketch (union is lossless on registers); replaying a batch is a
-    no-op by idempotence — NO high-water mark exists in this state,
-    the algebra is the exactly-once mechanism."""
+    no-op twice over — the swap state's high-water mark skips it, and
+    register max is idempotent anyway."""
     from hadron_spark.operators.sketch import hll_estimate, hll_rollup
     from hadron_spark.sources import fs
     from hadron_spark.streaming.ops import hll_apply_fn
@@ -523,7 +523,7 @@ def test_incremental_hll_matches_batch_and_replay(spark, sf_dir, tmp_path):
 def test_incremental_moments_matches_batch_replay_recovery(spark, sf_dir, tmp_path):
     """Streamed (n, Σy, Σy²) state == one-shot groupBy regardless of
     batch chopping; replayed batch merges exactly once; interrupted
-    swap heals; NULL keys drop (the marker slot)."""
+    swap heals; NULL keys drop."""
     from hadron_spark.sources import fs
     from hadron_spark.streaming.ops import moments_apply_fn, read_moments_state
 
@@ -644,6 +644,73 @@ def test_incremental_histogram_matches_batch_replay_recovery(spark, sf_dir, tmp_
     }
     assert got == want
     assert ("click", -1) in got and ("click", 25) in got
+
+
+def test_swap_state_raw_read_is_exactly_the_state(spark, tmp_path):
+    """The batch high-water mark of a swap-class state is an empty
+    `_hwm_<id>` dir, not a data row: a raw parquet read of a moments
+    state and of a transitions state holds exactly the rows their
+    readers return."""
+    from hadron_spark.sources import fs
+    from hadron_spark.streaming.ops import (
+        moments_apply_fn,
+        read_moments_state,
+        read_transitions_state,
+        transitions_apply_fn,
+    )
+
+    mom = str(tmp_path / "mom_state")
+    apply = moments_apply_fn(mom, "k", "y")
+    apply(spark.createDataFrame(
+        [("a", 1), ("b", 2), (None, 5)], "k string, y long"), 0)
+    apply(spark.createDataFrame([("a", 3)], "k string, y long"), 1)
+    raw = sorted(tuple(r) for r in spark.read.parquet(mom)
+                 .select("k", "n", "sy", "syy").collect())
+    assert raw == [("a", 2, 4, 10), ("b", 1, 2, 4)]
+    assert raw == sorted(
+        tuple(r) for r in read_moments_state(spark, mom, "k").collect()
+    )
+    names = {e.path.rstrip("/").rsplit("/", 1)[1] for e in fs.ls(spark, mom)}
+    assert "_hwm_1" in names and "_hwm_0" not in names
+
+    tr = str(tmp_path / "trans_state")
+    apply = transitions_apply_fn(tr, "u", "s", "o")
+    schema = "u long, s string, o long"
+    apply(spark.createDataFrame([(1, "x", 1), (1, "y", 2), (2, "x", 1)],
+                                schema), 0)
+    apply(spark.createDataFrame([(1, "x", 3)], schema), 1)
+    raw = spark.read.parquet(tr)
+    assert {r["kind"] for r in raw.collect()} == {"t", "e"}
+    got = sorted(
+        tuple(r) for r in raw.filter("kind = 't'")
+        .select("from_state", "to_state", "n").collect()
+    )
+    assert got == [("x", "y", 1), ("y", "x", 1)]
+    assert got == sorted(
+        tuple(r) for r in read_transitions_state(spark, tr)
+        .select("from_state", "to_state", "n").collect()
+    )
+    assert raw.filter("kind = 'e'").count() == 2  # one tail per entity
+
+
+def test_swap_state_without_mark_raises(spark, tmp_path):
+    """A state dir with no `_hwm_` entry was written when the mark was
+    a data row; merging it would count that row as data, so the next
+    apply must raise, naming the path."""
+    import re
+
+    import pytest
+
+    from hadron_spark.streaming.ops import moments_apply_fn
+
+    state = str(tmp_path / "old_state")
+    spark.createDataFrame(
+        [("a", 1, 1, 1), (None, 0, 0, 0)],
+        "k string, n long, sy long, syy long",
+    ).write.parquet(state)
+    apply = moments_apply_fn(state, "k", "y")
+    with pytest.raises(ValueError, match=re.escape(state)):
+        apply(spark.createDataFrame([("a", 3)], "k string, y long"), 1)
 
 
 def test_histogram_quantiles_reference(spark):
