@@ -582,7 +582,9 @@ def q14(spark, sf_dir):
     tiny (flag,status) cell table and derives the subtotal levels by
     re-aggregating cells. Decimal partials stay exact so the
     two-level sum is bit-identical to the native/oracle one-level
-    form."""
+    form.  An empty lineitem returns the one grand-total row with
+    n = 0 and a NULL sum_qty, as SQL's ROLLUP does — `n` is coalesced
+    because summing zero cells gives NULL."""
     li = load(spark, sf_dir, "lineitem")
     return ops.grouping_sets_from_cells(
         li,
@@ -591,7 +593,7 @@ def q14(spark, sf_dir):
         [*_split4_merge("_q"), F.sum("_n").alias("_n")],
         {
             "sum_qty": _split4_value("_q").cast("double"),
-            "n": F.col("_n"),
+            "n": F.coalesce(F.col("_n"), F.lit(0)),
         },
         mode="rollup",
     )
@@ -1069,7 +1071,7 @@ def q33(spark, sf_dir):
         [*_split4_merge("_q"), F.sum("_n").alias("_n")],
         {
             "sum_qty": _split4_value("_q").cast("double"),
-            "n": F.col("_n"),
+            "n": F.coalesce(F.col("_n"), F.lit(0)),
         },
         mode="cube",
     )

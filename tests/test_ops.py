@@ -3338,3 +3338,31 @@ def test_dispersion_test_reference(spark):
     assert got["flat"]["vmr"] == 0.0
     assert got["bursty"]["vmr"] > 10
     assert 0.3 < got["mixed"]["vmr"] < 3
+
+
+def test_grouping_sets_grand_total_on_empty_input(spark, sf_dir, tmp_path):
+    """ROLLUP (q14) and CUBE (q33) over an empty lineitem: the grand
+    total row counts n = 0 like the DuckDB oracle, never a NULL from
+    summing zero cells."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadron_spark.queries import ORACLES, QUERIES
+
+    schema = pq.read_schema(f"{sf_dir}/lineitem.parquet")
+    path = str(tmp_path / "lineitem.parquet")
+    pq.write_table(pa.Table.from_pylist([], schema=schema), path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{path}'")
+
+    def rows(dicts):
+        return sorted(repr(sorted(d.items())) for d in dicts)
+
+    for name in ("q14_rollup", "q33_cube"):
+        got = [r.asDict() for r in QUERIES[name](spark, str(tmp_path)).collect()]
+        cur = con.execute(ORACLES[name])
+        cols = [c[0] for c in cur.description]
+        want = [dict(zip(cols, r)) for r in cur.fetchall()]
+        assert rows(got) == rows(want), name
+        assert [d["n"] for d in got] == [0], name

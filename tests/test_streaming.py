@@ -925,6 +925,7 @@ def test_neardup_incremental_compaction_segments(spark, tmp_path):
 
     from hadron_spark.sources import fs
     from hadron_spark.streaming.ops import (
+        _segment_marker,
         compact_neardup_state,
         neardup_apply_fn,
         read_neardup_kept,
@@ -999,8 +1000,9 @@ def test_neardup_incremental_compaction_segments(spark, tmp_path):
     kb3 = {r["doc_id"] for r in read_neardup_kept(spark, sb).collect()}
     assert ka3 == kb3 and 30 not in ka3 and 31 in ka3
     # marker carries the single rebased segment
-    md = spark.read.parquet(sa + "/hwm_marker").collect()[0].asDict()
-    assert list(md["segs"]) == [3] and md["base"] == 3
+    m = _segment_marker(spark, sa)
+    assert m.segs == [3] and m.base == 3 and m.hwm == 3
+    assert m.params == {"num_hashes": 32, "bands": 8, "store_buckets": 64}
 
     # the rebased store still gates a later replayed duplicate
     dup = spark.createDataFrame(
@@ -1047,6 +1049,54 @@ def test_neardup_committed_partitions_immutable(spark, tmp_path):
     assert glob.glob(os.path.join(state, "sigs/batch=1/*"))
 
 
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs `fn()` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs_run_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_segment_store_replay_runs_no_job(spark, tmp_path):
+    """The segment-store marker is read by a listing, not a Spark job:
+    a replayed batch of either append store (and a no-op compaction)
+    runs 0 jobs and leaves the store as it was."""
+    from hadron_spark.sources import fs
+    from hadron_spark.streaming.ops import (
+        compact_substring_state,
+        neardup_apply_fn,
+        substring_dedup_apply_fn,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"document number {i} carries words {i * 7} and {i * 13} tail")
+         for i in range(8)],
+        "doc_id long, text string",
+    )
+    nd = str(tmp_path / "nd")
+    sub = str(tmp_path / "sub")
+    stores = [
+        (nd, neardup_apply_fn(nd, threshold=0.7, compact_every=None)),
+        (sub, substring_dedup_apply_fn(
+            sub, str(tmp_path / "sub_out"), window=4, compact_every=None)),
+    ]
+    for state, apply in stores:
+        apply(docs, 0)
+        before = sorted(e.path for e in fs.ls(spark, state))
+        assert _jobs_run(spark, lambda: apply(docs, 0)) == 0, state
+        assert sorted(e.path for e in fs.ls(spark, state)) == before
+    assert compact_substring_state(spark, sub) == 1
+    assert _jobs_run(spark, lambda: compact_substring_state(spark, sub)) == 0
+
+
 def test_neardup_probe_plan_is_pruned_broadcast(spark, tmp_path):
     """The 100 TB contract of the bucketed signature store: a batch
     probe against the compacted base must (a) partition-prune to the
@@ -1079,6 +1129,7 @@ def test_neardup_probe_plan_is_pruned_broadcast(spark, tmp_path):
     dup = _neardup_probe(
         spark, state, ns, 0, 0, threshold=0.7, num_hashes=16, bands=4,
         max_bucket_size=500, store_buckets=64, probe_key_limit=65536,
+        segs=[0],
     )
     plan = dup._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -1099,6 +1150,7 @@ def test_neardup_probe_plan_is_pruned_broadcast(spark, tmp_path):
     wide = _neardup_probe(
         spark, state, ns, 0, 0, threshold=0.7, num_hashes=16, bands=4,
         max_bucket_size=500, store_buckets=64, probe_key_limit=1,
+        segs=[0],
     )
     wplan = wide._jdf.queryExecution().executedPlan().toString()
     wpf = re.search(r"PartitionFilters: \[([^\]]*)\]", wplan)
@@ -1180,14 +1232,20 @@ def test_substring_state_segments_migration_drift(spark, tmp_path):
     """The substring fp store's segment layout: incremental folds
     write delta-only segments and never touch committed ones;
     decisions match a never-folded twin; full rebase collapses to one
-    segment; window drift raises; a legacy single-frame state
-    migrates in place."""
+    segment; window drift raises.  Layouts written before the marker
+    became a listing are not migrated: each raises ValueError naming
+    its path, while a root holding only a crashed first batch's dirs
+    is still a fresh store."""
+    import re
+
     import pytest
 
     from hadron_spark.sources import fs
     from hadron_spark.streaming.ops import (
-        _substring_marker_df,
+        _segment_marker,
         compact_substring_state,
+        neardup_apply_fn,
+        read_neardup_kept,
         substring_dedup_apply_fn,
     )
 
@@ -1228,8 +1286,8 @@ def test_substring_state_segments_migration_drift(spark, tmp_path):
     names = {e.path.rsplit("/", 1)[1] for e in fs.ls(spark, sa)}
     assert "fps_base=2" in names
     assert not {"fps_base=0", "fps_base=1"} & names
-    md = spark.read.parquet(sa + "/hwm_marker").collect()[0].asDict()
-    assert list(md["segs"]) == [2] and md["window"] == 4
+    m = _segment_marker(spark, sa)
+    assert m.segs == [2] and m.hwm == 2 and m.params == {"window": 4}
 
     # window drift raises instead of silently admitting repeats
     drifted = substring_dedup_apply_fn(sa, oa, window=6)
@@ -1238,31 +1296,42 @@ def test_substring_state_segments_migration_drift(spark, tmp_path):
     with pytest.raises(ValueError, match="window"):
         drifted(late, 3)
 
-    # legacy single-frame state migrates in place on first touch
+    # old layouts raise instead of reading as an empty store: a flat
+    # pre-segment fp frame, a parquet hwm_marker, a near-dup `_hwm` dir
     from hadron_spark.llm.dedup import span_fingerprint_store
 
-    legacy = str(tmp_path / "legacy")
-    fps = span_fingerprint_store(
+    flat = str(tmp_path / "flat_frame")
+    span_fingerprint_store(
         spark.createDataFrame([("alpha beta gamma delta epsilon zeta",)],
-                              "text string"), "text", 4)
-    fps.select(
-        F.lit("fp").alias("kind"), "fp", F.lit(None).cast("long").alias("bid")
-    ).unionByName(
-        spark.range(1).select(
-            F.lit("meta").alias("kind"),
-            F.lit(None).cast("binary").alias("fp"),
-            F.lit(0).cast("long").alias("bid"),
-        )
-    ).write.mode("overwrite").parquet(legacy)
-    lout = str(tmp_path / "legacy_out")
-    apply_l = substring_dedup_apply_fn(legacy, lout, window=4)
-    apply_l(spark.createDataFrame(
-        [(40, "alpha beta gamma delta postfix here")],
-        "doc_id long, text string"), 1)
-    got = spark.read.parquet(f"{lout}/batch=1").collect()
-    assert got[0].clean_text == "postfix here"   # legacy fps honored
-    md = spark.read.parquet(legacy + "/hwm_marker").collect()[0].asDict()
-    assert md["hwm"] == 1 and list(md["segs"]) == [0]
+                              "text string"), "text", 4,
+    ).write.parquet(flat)
+    pq_marker = str(tmp_path / "parquet_marker")
+    spark.range(1).select(
+        F.lit(0).cast("long").alias("hwm"),
+        F.lit(-1).cast("long").alias("base"),
+        F.lit(4).cast("long").alias("window"),
+    ).write.parquet(pq_marker + "/hwm_marker")
+    old_nd = str(tmp_path / "old_neardup")
+    spark.range(1).select(
+        F.lit(0).cast("long").alias("hwm"),
+        F.lit(-1).cast("long").alias("base"),
+    ).write.parquet(old_nd + "/_hwm")
+    for old in (flat, pq_marker):
+        apply_old = substring_dedup_apply_fn(old, oa + "_old", window=4)
+        with pytest.raises(ValueError, match=re.escape(old)):
+            apply_old(late, 3)
+    with pytest.raises(ValueError, match=re.escape(old_nd)):
+        neardup_apply_fn(old_nd)(late, 3)
+    with pytest.raises(ValueError, match=re.escape(old_nd)):
+        read_neardup_kept(spark, old_nd)
+
+    # a crash before the first commit leaves batch dirs and no marker:
+    # still a fresh store, the replay overwrites them
+    crashed = str(tmp_path / "crashed")
+    fs.mkdir(spark, crashed + "/fps/batch=0")
+    apply_c = substring_dedup_apply_fn(crashed, oa + "_crashed", window=4)
+    apply_c(late, 0)
+    assert _segment_marker(spark, crashed).hwm == 0
 
 
 def test_incremental_cusum_chop_equivalence(spark, tmp_path):

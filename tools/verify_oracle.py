@@ -3,17 +3,26 @@ hadron_spark.queries against its DuckDB oracle at a given SF and
 report row-count / schema / value match.
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
+
+Each query runs in its own Spark job group; one still running after
+QUERY_TIMEOUT_S seconds is cancelled and counted as a failure, so a
+blow-up cannot hang the sweep.
 """
 
 from __future__ import annotations
 
 import math
 import sys
+import threading
 
 import duckdb
 import pandas as pd
 
 sys.path.insert(0, ".")
+
+# wall bound per query (Spark side), far above a healthy query: the
+# full sf0.01 sweep of ~358 queries takes ~17 min
+QUERY_TIMEOUT_S = 300
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -89,12 +98,29 @@ def main() -> int:
         import time
 
         t0 = time.time()
+        group = f"verify_oracle:{name}"
+        timed_out = threading.Event()
+
+        def cancel(group=group, timed_out=timed_out):
+            # also cancels the group's later jobs: a query between two
+            # jobs at the deadline must not start the next one
+            timed_out.set()
+            spark.sparkContext._jsc.sc().cancelJobGroupAndFutureJobs(group)
+
+        timer = threading.Timer(QUERY_TIMEOUT_S, cancel)
+        spark.sparkContext.setJobGroup(group, name, interruptOnCancel=True)
+        timer.start()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {exc}")
+            if timed_out.is_set():
+                print(f"FAIL  {name}: timeout after {QUERY_TIMEOUT_S} s")
+            else:
+                print(f"FAIL  {name}: spark error: {exc}")
             failures.append(name)
             continue
+        finally:
+            timer.cancel()
         elapsed = time.time() - t0
         if name not in ORACLES:
             print(f"rows  {name}: {len(sdf)} rows (no oracle) [{elapsed:.1f}s]")
